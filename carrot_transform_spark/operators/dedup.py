@@ -16,6 +16,7 @@ Scale design:
 
 from __future__ import annotations
 
+import logging
 import threading
 from contextlib import contextmanager
 
@@ -23,6 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from carrot_transform_spark.functions.rounding import fround
+from carrot_transform_spark.session import broadcast_threshold
 
 # _constraint_propagation_off is re-entrant across DRIVER THREADS: suite
 # builders run from a thread pool (queries/__init__.register_suite) and the
@@ -206,23 +208,21 @@ def prefer_shuffle_hash(index: DataFrame) -> bool:
     materializes the persisted index before planning the verify join: an
     index too big for any broadcast means the join is big x big and the
     shuffled-hash build of the bounded pairs⋈shingles side wins (r16 sf10
-    A/B: 20.3 s vs 27.0 s SMJ). Unknown stats keep the planner's choice."""
+    A/B: 20.3 s vs 27.0 s SMJ). A negative threshold disables broadcast
+    joins altogether, so every join is big x big: hint. Unknown stats keep
+    the planner's choice, with a warning."""
+    threshold = broadcast_threshold(index.sparkSession)
+    if threshold < 0:
+        return True
     try:
-        spark = index.sparkSession
-        raw = str(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        ).lower().strip()
-        mult = 1
-        for suf, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                       ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-            if raw.endswith(suf):
-                raw, mult = raw[: -len(suf)], m
-                break
-        bthreshold = int(raw) * mult
         size = int(index._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        return bthreshold >= 0 and size > bthreshold
     except Exception:
+        logging.getLogger(__name__).warning(
+            "prefer_shuffle_hash: plan-size stats unavailable; keeping the "
+            "planner's join choice", exc_info=True,
+        )
         return False
+    return size > threshold
 
 
 def jaccard_verify(

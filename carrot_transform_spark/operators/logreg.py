@@ -53,10 +53,11 @@ _BIAS = -1  # bucket id of the bias feature (tf = 1.0 on every doc)
 # at gate scale each distributed round was ~1.1 s of pure stage-scheduling
 # latency over ~36k rows (measured sf0.01; the suite wall was this one
 # builder), while the same 12 rounds over numpy arrays take ~10 ms. The
-# arithmetic is the identical IEEE op sequence (sum -> sigmoid -> sum/n ->
-# fround 1e-9 per round); the per-round 1e-9 weight quantisation absorbs
-# sub-ulp libm/order drift by design — the same tolerance that already
-# lets the DuckDB chained-CTE twin match bit-for-bit. Above the threshold
+# steps are the same (sum -> sigmoid -> sum/n -> fround 1e-9 per round),
+# but summation order and libm differ between numpy and Spark, so the raw
+# doubles can drift by a few ulps; in practice the per-round 1e-9 weight
+# quantisation absorbs that drift — the same tolerance that lets the
+# DuckDB chained-CTE twin match. Above the threshold
 # the distributed loop engages unchanged (its per-round cost is one cache
 # scan, independent of round count — the 100 TB posture).
 LOCAL_TRAIN_ROWS = int(os.environ.get("SPARK_GRAFT_LOGREG_LOCAL_ROWS", "2000000"))

@@ -13,6 +13,7 @@ Lifecycle (reference cli/subcommands/run.py:28-341, run_v2.py:16-59):
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -76,7 +77,7 @@ def run_transform(
     source = inputs if isinstance(inputs, Source) else make_source(spark, str(inputs))
     if isinstance(source, CsvDirSource):
         for w in check_files_exist(rules, source.directory):
-            print(f"warning: {w}")
+            logging.getLogger(__name__).warning("%s", w)
 
     planner = CarrotPlanner(
         spark,

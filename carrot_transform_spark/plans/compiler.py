@@ -113,34 +113,13 @@ class CarrotPlanner:
         self._group_norm_cache: dict[tuple, DataFrame] = {}
         self._pending_rejects: list[tuple[DataFrame, RejectStats]] = []
         self._metrics_seq = 0
-        # plan-construction memos: every Column operation is a synchronous
-        # py4j round trip (~130 us), and a wide rules set builds tens of
-        # thousands of identical default/override columns — reusing the
-        # Column handles cuts record-struct construction ~4x (Column
-        # expression trees are immutable; sharing subtrees is safe).
-        # _const_field_cache: table -> all-constant base record struct;
-        # _override_cache: (id(column), dest) -> (column ref, aliased
-        # override) — the ref pins the keyed object so a GC'd id can never
-        # alias a different column.
-        self._const_field_cache: dict[str, Column] = {}
-        self._override_cache: dict[tuple[int, str], tuple[Column, Column]] = {}
-        self._lit_cache: dict[tuple[str, object], Column] = {}
-        self._tail_cache: dict[tuple[int, int, int], tuple] = {}
         self._main_fields_memo: dict[str, tuple[str | None, str | None]] = {}
-        # Thread-safety note (compile runs across a thread pool): every
-        # mutation that must be observed exactly once — the _pending_* queues
-        # and _main_fields_memo/_norm_cache writes — happens under
-        # _compile_lock. The pure-memoization dicts (_lit/_const/_override/
-        # _tail caches) are intentionally unlocked: a lost get/set race just
-        # recomputes an identical immutable Column, and per-object dict ops
-        # are atomic on CPython (incl. free-threaded builds' per-dict locks).
         # fences the planner's Python bookkeeping (metric sequence numbers,
         # counted-file set, norm-scan memo) when target_candidates builds
-        # per-file plans across a thread pool; the Column caches need no
-        # fence (immutable values, last-write-wins)
-        import threading
-
-        self._compile_lock = threading.Lock()
+        # per-file plans across a thread pool: every mutation that must be
+        # observed exactly once — the _pending_* queues and
+        # _main_fields_memo/_norm_cache writes — happens under it
+        self._compile_lock = _threading.Lock()
 
     def _file_main_fields(self, src_file: str) -> tuple[str | None, str | None]:
         """The file's MAIN (datetime, person-id) source columns.
@@ -259,16 +238,6 @@ class CarrotPlanner:
         if len(keep) >= len(df.columns):
             return None
         return [c for c in df.columns if c in keep]
-
-    def _lit(self, v) -> Column:
-        """Memoized F.lit for the scalar literals a rules set repeats
-        thousands of times (field names, combo indexes, mapped values)."""
-        key = (type(v).__name__, v)
-        c = self._lit_cache.get(key)
-        if c is None:
-            c = F.lit(v)
-            self._lit_cache[key] = c
-        return c
 
     def release(self) -> None:
         """Unpersist every DataFrame cached by this planner (call after the
@@ -1585,142 +1554,18 @@ class CarrotPlanner:
         ]
         return exploded.select(*cols, *meta)
 
-    # -- column-expression record builders ------------------------------
-
-    def _common_column_values(
-        self,
-        df: DataFrame,
-        tm: TableMapping,
-        schema: TableSchema,
-        raw_date_field: str | None = None,
-    ) -> dict[str, Column]:
-        """Dest column -> value for person-id and date destinations
-        (applied last == highest precedence, record_builder.py:53-147).
-
-        ``raw_date_field`` set means the target's date source is NOT the
-        file's main datetime column: the RAW cell is copied (the reference
-        only normalises the main column in place, orchestrator.py:141-152),
-        and the derived artifacts come from the raw value — [:10] slice for
-        the linked twin, split-at-space strict parse for components. A raw
-        source missing from the header writes no date fields at all
-        (record_builder.py:74-79)."""
-        target = tm.target_table
-        out: dict[str, Column] = {}
-        if tm.person_id_mapping and tm.person_id_mapping.dest_field in schema.columns:
-            src = _try_resolve(df, tm.person_id_mapping.source_field)
-            if src is not None:
-                out[tm.person_id_mapping.dest_field] = src
-        linked = self.omop.linked_date_fields(target)
-        comp = self.omop.date_components(target)
-        if raw_date_field is not None:
-            norm = _try_resolve(df, raw_date_field)
-            if norm is None:
-                return out
-            dt = strict_date(F.substring_index(norm, " ", 1))
-            d10 = F.substring(norm, 1, 10)
-        else:
-            norm = F.col("__ct_norm")
-            dt = strict_date(F.substring(norm, 1, 10))
-            d10 = F.substring(norm, 1, 10)
-        if tm.date_mapping:
-            companions = set(tm.date_mapping.companions())
-            for dest in tm.date_mapping.dest_fields:
-                if dest not in schema.columns:
-                    continue
-                out[dest] = norm
-                if dest not in companions:
-                    continue
-                if dest in comp:
-                    # D3: birth_datetime -> year/month/day, str(int) unpadded
-                    ci = comp[dest]
-                    if "year" in ci and ci["year"] in schema.columns:
-                        out[ci["year"]] = F.year(dt).cast("string")
-                    if "month" in ci and ci["month"] in schema.columns:
-                        out[ci["month"]] = F.month(dt).cast("string")
-                    if "day" in ci and ci["day"] in schema.columns:
-                        out[ci["day"]] = F.dayofmonth(dt).cast("string")
-                elif dest in linked and linked[dest] in schema.columns:
-                    # D4: *_datetime -> paired *_date = first 10 chars
-                    out[linked[dest]] = d10
-        return out
-
-    def _record_struct(
-        self,
-        schema: TableSchema,
-        overrides: dict[str, Column],
-        field_name: Column,
-        combo_idx: Column,
-        field_idx: Column | None = None,
-    ) -> Column:
-        # the all-constant base struct (defaults + tail placeholders) is
-        # built ONCE per table; each record then replaces only its
-        # overridden fields with withField — ~|overrides|+3 py4j calls per
-        # struct instead of |schema.columns|+3 (F.struct's seq conversion
-        # is one round trip per element). withField replaces in place, so
-        # field order is identical to the full F.struct form.
-        base = self._const_field_cache.get(schema.name)
-        if base is None:
-            fields = [
-                (
-                    F.lit("0")  # P3 (omopcdm.py:113-118, record_builder.py:28-37)
-                    if c in schema.notnull_numeric_fields
-                    else F.lit("")
-                ).alias(c)
-                for c in schema.columns
-            ]
-            fields.append(F.lit("").alias(FIELD_COL))
-            fields.append(F.lit(0).alias(FIELDIDX_COL))
-            fields.append(F.lit(0).alias(COMBO_COL))
-            base = F.struct(*fields)
-            self._const_field_cache[schema.name] = base
-        s = base
-        for c in schema.columns:
-            if c not in overrides:
-                continue
-            ov = overrides[c]
-            hit = self._override_cache.get((id(ov), c))
-            if hit is not None and hit[0] is ov:
-                built = hit[1]
-            else:
-                built = F.coalesce(ov.cast("string"), F.lit(""))
-                self._override_cache[(id(ov), c)] = (ov, built)
-            s = s.withField(c, built)
-        tkey = (id(field_name), id(combo_idx), id(field_idx))
-        hit = self._tail_cache.get(tkey)
-        if (
-            hit is not None
-            and hit[0] is field_name
-            and hit[1] is combo_idx
-            and hit[2] is field_idx
-        ):
-            tail = hit[3]
-        else:
-            tail = [
-                field_name.cast("string"),
-                (field_idx if field_idx is not None else F.lit(0)).cast("int"),
-                combo_idx.cast("int"),
-            ]
-            self._tail_cache[tkey] = (field_name, combo_idx, field_idx, tail)
-        return (
-            s.withField(FIELD_COL, tail[0])
-            .withField(FIELDIDX_COL, tail[1])
-            .withField(COMBO_COL, tail[2])
-        )
-
     # -- SQL-text record builder ----------------------------------------
     #
-    # The standard-target record generator is assembled as ONE SQL string
-    # per source block and handed to F.expr: every Column operation is a
-    # synchronous py4j round trip (~150 us, and py4j serializes across
-    # threads), so a wide rules set (50 blocks x 20 fields) used to spend
-    # ~1 minute just CONSTRUCTING expression trees. String assembly is
-    # pure Python (microseconds) and the JVM parses each block's
-    # expression once. Inputs are only literals and resolved COLUMN NAMES
-    # — the date-derived commons are materialized on the cached scan
+    # Every record generator is assembled as ONE SQL string per source
+    # block and handed to F.expr: every Column operation is a synchronous
+    # py4j round trip (~150 us, and py4j serializes across threads), so a
+    # wide rules set (50 blocks x 20 fields) used to spend ~1 minute just
+    # CONSTRUCTING expression trees. String assembly is pure Python
+    # (microseconds) and the JVM parses each block's expression once.
+    # Inputs are only literals and resolved COLUMN NAMES — the date-derived
+    # commons are materialized on the cached scan
     # (__ct_norm/__ct_d10/__ct_y/__ct_mo/__ct_dd) precisely so no
-    # Column->SQL conversion is ever needed. Semantics are the exact SQL
-    # twins of the retired Column forms (same functions, same order), and
-    # every golden/oracle test runs through this path.
+    # Column->SQL conversion is ever needed.
 
     def _common_values_sql(
         self,
@@ -1729,60 +1574,28 @@ class CarrotPlanner:
         schema: TableSchema,
         raw_date_field: str | None = None,
     ) -> dict[str, str]:
-        """SQL twin of _common_column_values: dest -> fragment.
+        """Dest column -> SQL fragment for person-id and date destinations
+        (applied last == highest precedence, record_builder.py:53-147).
 
-        ``raw_date_field`` (target's date source != the file's main
-        datetime column): the raw cell is copied and the derived artifacts
-        are inlined over the raw column name — see the Column twin's
-        docstring for the reference semantics."""
-        target = tm.target_table
+        ``raw_date_field`` set means the target's date source is NOT the
+        file's main datetime column: the RAW cell is copied (the reference
+        only normalises the main column in place, orchestrator.py:141-152)
+        — see _date_values_sql."""
         out: dict[str, str] = {}
         if tm.person_id_mapping and tm.person_id_mapping.dest_field in schema.columns:
             src = _try_resolve_name(df, tm.person_id_mapping.source_field)
             if src is not None:
                 out[tm.person_id_mapping.dest_field] = _sql_ident(src)
-        linked = self.omop.linked_date_fields(target)
-        comp = self.omop.date_components(target)
-        if raw_date_field is not None:
-            raw_name = _try_resolve_name(df, raw_date_field)
-            if raw_name is None:
-                return out
-            val = _sql_ident(raw_name)
-            sd = strict_date_sql(f"substring_index({val}, ' ', 1)")
-            d10 = f"substring({val}, 1, 10)"
-            names = {
-                "val": val,
-                "d10": d10,
-                "y": f"CAST(year({sd}) AS STRING)",
-                "mo": f"CAST(month({sd}) AS STRING)",
-                "dd": f"CAST(dayofmonth({sd}) AS STRING)",
-            }
-        else:
-            names = {
-                "val": "__ct_norm",
-                "d10": "__ct_d10",
-                "y": "__ct_y",
-                "mo": "__ct_mo",
-                "dd": "__ct_dd",
-            }
         if tm.date_mapping:
-            companions = set(tm.date_mapping.companions())
-            for dest in tm.date_mapping.dest_fields:
-                if dest not in schema.columns:
-                    continue
-                out[dest] = names["val"]
-                if dest not in companions:
-                    continue
-                if dest in comp:
-                    ci = comp[dest]
-                    if "year" in ci and ci["year"] in schema.columns:
-                        out[ci["year"]] = names["y"]
-                    if "month" in ci and ci["month"] in schema.columns:
-                        out[ci["month"]] = names["mo"]
-                    if "day" in ci and ci["day"] in schema.columns:
-                        out[ci["day"]] = names["dd"]
-                elif dest in linked and linked[dest] in schema.columns:
-                    out[linked[dest]] = names["d10"]
+            out.update(
+                self._date_values_sql(
+                    df,
+                    schema,
+                    tm.target_table,
+                    [(raw_date_field, d) for d in tm.date_mapping.dest_fields],
+                    set(tm.date_mapping.companions()),
+                )
+            )
         return out
 
     def _record_struct_sql(
@@ -1794,8 +1607,10 @@ class CarrotPlanner:
         field_idx: int,
         wrap_overrides: bool = True,
     ) -> str:
-        """named_struct text for one record — same fields, order, defaults,
-        and override coalescing as _record_struct."""
+        """named_struct text for one record: every OMOP column (override,
+        else its default — '0' for not-null numerics, P3 omopcdm.py:113-118,
+        record_builder.py:28-37 — else ''), then the field / field-index /
+        combination metadata."""
         parts: list[str] = []
         for c in schema.columns:
             ov = overrides.get(c)
@@ -1813,39 +1628,43 @@ class CarrotPlanner:
 
     @staticmethod
     def _empty_arr_sql(template: str) -> str:
-        # twin of _empty_like: typed empty array via an always-false filter
+        # typed empty array via an always-false filter
         return f"filter(array({template}), __ct_e -> false)"
+
+    def _empty_records_col(self, schema: TableSchema) -> Column:
+        return F.expr(self._empty_arr_sql(self._record_struct_sql(schema, {}, "", 0, 0)))
 
     def _date_values_sql(
         self,
         df: DataFrame,
         schema: TableSchema,
         target: str,
-        date_writes: list,
-        main_dt: str | None,
+        date_writes: list[tuple[str | None, str]],
         companions: set,
     ) -> dict[str, str]:
-        """SQL fragments for ONE block's own date writes: each (source,
-        dest) pair copies the source cell — the normalised __ct_* columns
-        when the source IS the file's main datetime column, the raw cell
-        otherwise — and the companion dest carries the derived artifacts
-        (linked *_date twin / y-m-d components). A source missing from the
-        header writes nothing (record_builder.py:74-79)."""
+        """SQL fragments for (source, dest) date writes: each copies the
+        source cell — the normalised __ct_* columns when the source is None
+        (the file's main datetime column), the raw cell otherwise — and a
+        companion dest carries the derived artifacts: D3 year/month/day
+        components (str(int), unpadded) or the D4 linked *_date twin (first
+        10 chars). Raw artifacts are inlined over the raw column: [:10]
+        slice for the twin, split-at-space strict parse for components. A
+        raw source missing from the header writes nothing
+        (record_builder.py:74-79)."""
         linked = self.omop.linked_date_fields(target)
         comp = self.omop.date_components(target)
         out: dict[str, str] = {}
-        norm_names = {
-            "val": "__ct_norm",
-            "d10": "__ct_d10",
-            "y": "__ct_y",
-            "mo": "__ct_mo",
-            "dd": "__ct_dd",
-        }
         for src, dest in date_writes:
             if dest not in schema.columns:
                 continue
-            if main_dt is not None and src == main_dt:
-                names = norm_names
+            if src is None:
+                names = {
+                    "val": "__ct_norm",
+                    "d10": "__ct_d10",
+                    "y": "__ct_y",
+                    "mo": "__ct_mo",
+                    "dd": "__ct_dd",
+                }
             else:
                 rn = _try_resolve_name(df, src)
                 if rn is None:
@@ -1871,6 +1690,54 @@ class CarrotPlanner:
                 out[linked[dest]] = names["d10"]
         return out
 
+    def _clamped_zip_sql(
+        self,
+        schema: TableSchema,
+        arrs: dict[str, str],
+        over: dict[str, str],
+        max_n: int,
+        fname: str,
+        fidx: int,
+        fallback_n: str | None = None,
+    ) -> tuple[str, str]:
+        """Clamped-zip combination records (X1,
+        concept_helpers.generate_combinations): record k takes element
+        min(k, len-1) of every matched dest -> concept-id array in ``arrs``
+        (NULL = unmatched), then ``over`` — the row's other writes, which
+        win dest collisions. The record count is the largest matched array
+        size, else ``fallback_n``; ``max_n`` bounds it. Returns the record
+        array and a typed empty array of the same shape."""
+        sizes = [f"COALESCE(size({a}), 0)" for a in arrs.values()]
+        if len(sizes) > 1:
+            n_rec = f"greatest({', '.join(sizes)}, 0)"
+        else:
+            n_rec = sizes[0] if sizes else "0"
+        if fallback_n is not None:
+            n_rec = f"CASE WHEN ({n_rec}) > 0 THEN {n_rec} ELSE {fallback_n} END"
+        recs = []
+        for k in range(max_n):
+            concept_over = {
+                d: (
+                    f"CASE WHEN {a} IS NOT NULL THEN "
+                    f"element_at({a}, least({k + 1}, size({a}))) END"
+                )
+                for d, a in arrs.items()
+                if d in schema.columns
+            }
+            merged = {
+                d: "COALESCE({}, {})".format(
+                    v, "'0'" if d in schema.notnull_numeric_fields else "''"
+                )
+                for d, v in {**concept_over, **over}.items()
+            }
+            recs.append(self._record_struct_sql(schema, merged, fname, k, fidx))
+        empty = self._empty_arr_sql(recs[0])
+        return (
+            f"CASE WHEN ({n_rec}) > 0 THEN slice(array({', '.join(recs)}), 1, {n_rec}) "
+            f"ELSE {empty} END",
+            empty,
+        )
+
     def _joined_field_records_sql(
         self,
         cm,
@@ -1884,9 +1751,8 @@ class CarrotPlanner:
         copy_over: dict[str, str] | None = None,
         wild_matched: str | None = None,
     ) -> str:
-        """SQL twin of the per-field dest-map record builder: exact match
-        beats wildcard, clamped-zip combinations, blank cells never match
-        (formerly _joined_field_records).
+        """Per-field dest-map record builder: exact match beats wildcard,
+        clamped-zip combinations, blank cells never match.
 
         ``wild_matched``: grouped-template mode — the wildcard dest map
         comes from a per-file data COLUMN instead of an inlined literal
@@ -1895,11 +1761,7 @@ class CarrotPlanner:
         if wild_matched is not None:
             eff = f"COALESCE({matched}, {wild_matched})"
         elif wild:
-            pairs = [
-                f"{_sql_str(d)}, array({', '.join(_sql_str(str(x)) for x in ids)})"
-                for d, ids in wild.items()
-                if ids
-            ]
+            pairs = [f"{_sql_str(d)}, {_sql_str_array(ids)}" for d, ids in wild.items() if ids]
             eff = f"COALESCE({matched}, map({', '.join(pairs)}))" if pairs else matched
         else:
             eff = matched
@@ -1911,40 +1773,22 @@ class CarrotPlanner:
                     all_dests.append(d)
                 if ids:
                     max_n = max(max_n, len(ids))
-        arrs = {d: f"element_at({eff}, {_sql_str(d)})" for d in all_dests}
-        sizes = [f"COALESCE(size({arrs[d]}), 0)" for d in all_dests]
-        if len(sizes) > 1:
-            n_rec = f"greatest({', '.join(sizes)}, 0)"
-        else:
-            n_rec = sizes[0] if sizes else "0"
-        recs = []
-        for k in range(max_n):
-            concept_over = {
-                d: (
-                    f"CASE WHEN {arrs[d]} IS NOT NULL THEN "
-                    f"element_at({arrs[d]}, least({k + 1}, size({arrs[d]}))) END"
-                )
-                for d in all_dests
-                if d in schema.columns
-            }
-            orig_over = {d: cell for d in cm.original_value_fields if d in schema.columns}
-            merged = {
-                **concept_over,
-                **(lit_over or {}),
-                **orig_over,
-                **(copy_over or {}),
-                **common,
-            }
-            merged = {
-                d: "COALESCE({}, {})".format(
-                    v, "'0'" if d in schema.notnull_numeric_fields else "''"
-                )
-                for d, v in merged.items()
-            }
-            recs.append(self._record_struct_sql(schema, merged, fname, k, fidx))
-        full = f"array({', '.join(recs)})"
-        empty = self._empty_arr_sql(recs[0])
-        sel = f"CASE WHEN ({n_rec}) > 0 THEN slice({full}, 1, {n_rec}) ELSE {empty} END"
+        # precedence (low->high): concept, literals, original value, plain
+        # copies, person id + dates
+        over = {
+            **(lit_over or {}),
+            **{d: cell for d in cm.original_value_fields if d in schema.columns},
+            **(copy_over or {}),
+            **common,
+        }
+        sel, empty = self._clamped_zip_sql(
+            schema,
+            {d: f"element_at({eff}, {_sql_str(d)})" for d in all_dests},
+            over,
+            max_n,
+            fname,
+            fidx,
+        )
         return (
             f"CASE WHEN COALESCE(trim({cell}) != '', false) THEN {sel} "
             f"ELSE {empty} END"
@@ -2106,7 +1950,10 @@ class CarrotPlanner:
                     if dw:
                         common_cm.update(
                             self._date_values_sql(
-                                df, schema, tm.target_table, dw, main_dt_b,
+                                df,
+                                schema,
+                                tm.target_table,
+                                [(None if src == main_dt_b else src, dest) for src, dest in dw],
                                 set(comps_cm),
                             )
                         )
@@ -2144,9 +1991,7 @@ class CarrotPlanner:
                 pairs = []
                 for v, m in exact.items():
                     dest_pairs = [
-                        f"{_sql_str(d)}, array({', '.join(_sql_str(str(x)) for x in ids)})"
-                        for d, ids in m.items()
-                        if ids
+                        f"{_sql_str(d)}, {_sql_str_array(ids)}" for d, ids in m.items() if ids
                     ]
                     pairs.append(f"{_sql_str(v)}, map({', '.join(dest_pairs)})")
                 matched = (
@@ -2209,7 +2054,7 @@ class CarrotPlanner:
                 f"CASE WHEN trim({cell}) != '' THEN {sel} ELSE {empty} END"
             )
         if not per_field:
-            return _empty_like(self._record_struct(schema, {}, F.lit(""), F.lit(0)))
+            return self._empty_records_col(schema)
         return F.expr(f"flatten(array({', '.join(per_field)}))")
 
     def _person_records_col(
@@ -2222,113 +2067,76 @@ class CarrotPlanner:
         """array<record> for the person target: mappings MERGED across all
         fields (later field wins dest-field collisions), then one clamped-zip
         combination set (PersonRecordBuilder, record_builder.py:199-303)."""
-        common = self._common_column_values(df, tm, schema, raw_date_field)
-
-        fields = list(tm.concept_mappings.items())
+        common = self._common_values_sql(df, tm, schema, raw_date_field)
+        fields = []
+        for fname, cm in tm.concept_mappings.items():
+            cname = _try_resolve_name(df, fname)
+            if cname is not None:
+                fields.append((_sql_ident(cname), cm))
         # per dest column: coalesce(last field's match, ..., first field's)
-        dest_arrays: dict[str, Column] = {}
         all_dests: list[str] = []
-        for fname, cm in fields:
+        for cm in tm.concept_mappings.values():
             for dm in cm.value_mappings.values():
                 for d in dm:
                     if d not in all_dests:
                         all_dests.append(d)
+        dest_arrays: dict[str, str] = {}
         max_n = 1
         for d in all_dests:
-            picks: list[Column] = []
-            for fname, cm in reversed(fields):
-                cell = _try_resolve(df, fname)
-                if cell is None:
-                    continue
-                exact = {v: m for v, m in cm.value_mappings.items() if v != "*"}
-                wild = cm.value_mappings.get("*")
-                branch = None
-                for value, dmap in exact.items():
+            picks: list[str] = []
+            for cell, cm in reversed(fields):
+                branches = []
+                for value, dmap in cm.value_mappings.items():
+                    if value == "*":
+                        continue
                     ids = dmap.get(d)
-                    arr = (
-                        F.array(*[F.lit(i) for i in ids]) if ids else F.lit(None).cast("array<int>")
-                    )
-                    cond = cell == self._lit(value)
-                    branch = F.when(cond, arr) if branch is None else branch.when(cond, arr)
+                    arr = _sql_str_array(ids) if ids else "CAST(NULL AS ARRAY<STRING>)"
+                    branches.append(f"WHEN {cell} = {_sql_str(value)} THEN {arr}")
                     if ids:
                         max_n = max(max_n, len(ids))
+                wild = cm.value_mappings.get("*")
                 wild_arr = None
                 if wild and wild.get(d):
-                    wild_arr = F.array(*[F.lit(i) for i in wild[d]])
+                    wild_arr = _sql_str_array(wild[d])
                     max_n = max(max_n, len(wild[d]))
-                if branch is None and wild_arr is None:
+                if not branches and wild_arr is None:
                     continue
-                if branch is None:
+                if not branches:
                     sel = wild_arr
                 else:
-                    sel = branch.otherwise(wild_arr) if wild_arr is not None else branch
-                picks.append(F.when(valid_value(cell), sel))
+                    tail = f" ELSE {wild_arr}" if wild_arr is not None else ""
+                    sel = f"CASE {' '.join(branches)}{tail} END"
+                picks.append(f"CASE WHEN trim({cell}) != '' THEN {sel} END")
             if picks:
-                dest_arrays[d] = F.coalesce(*picks) if len(picks) > 1 else picks[0]
+                dest_arrays[d] = (
+                    f"COALESCE({', '.join(picks)})" if len(picks) > 1 else picks[0]
+                )
 
         # original values: later field wins (record_builder.py:274-277)
-        orig_values: dict[str, Column] = {}
-        for fname, cm in fields:
-            cell = _try_resolve(df, fname)
-            if cell is None:
-                continue
+        orig_values: dict[str, str] = {}
+        for cell, cm in fields:
             for d in cm.original_value_fields:
                 if d not in schema.columns:
                     continue
+                cur = f"CASE WHEN trim({cell}) != '' THEN {cell} END"
                 prev = orig_values.get(d)
-                cur = F.when(valid_value(cell), cell)
-                orig_values[d] = F.coalesce(cur, prev) if prev is not None else cur
-
-        any_concept = None
-        for d, arr in dest_arrays.items():
-            c = arr.isNotNull()
-            any_concept = c if any_concept is None else (any_concept | c)
-        any_orig = None
-        for d, v in orig_values.items():
-            c = v.isNotNull()
-            any_orig = c if any_orig is None else (any_orig | c)
-        if any_concept is None and any_orig is None:
-            return _empty_like(self._record_struct(schema, {}, F.lit(""), F.lit(0)))
+                orig_values[d] = f"COALESCE({cur}, {prev})" if prev is not None else cur
+        if not dest_arrays and not orig_values:
+            return self._empty_records_col(schema)
 
         # n combos = max size over matched dest arrays (clamp semantics);
         # 1 when only original values matched
-        sizes = [F.coalesce(F.size(arr), F.lit(0)) for arr in dest_arrays.values()]
-        n_concepts = F.greatest(*sizes, F.lit(0)) if len(sizes) > 1 else (
-            sizes[0] if sizes else F.lit(0)
+        any_orig = " OR ".join(f"({v}) IS NOT NULL" for v in orig_values.values())
+        records, _ = self._clamped_zip_sql(
+            schema,
+            dest_arrays,
+            {**orig_values, **common},
+            max_n,
+            next(iter(tm.concept_mappings), ""),
+            0,
+            fallback_n=f"CASE WHEN {any_orig} THEN 1 ELSE 0 END" if any_orig else None,
         )
-        n_records = F.when(n_concepts > 0, n_concepts).otherwise(
-            F.when(any_orig if any_orig is not None else F.lit(False), F.lit(1)).otherwise(F.lit(0))
-        )
-
-        first_field = next(iter(tm.concept_mappings), "")
-        recs = []
-        for k in range(max_n):
-            concept_over = {
-                d: F.when(
-                    arr.isNotNull(),
-                    F.element_at(arr, F.least(F.lit(k + 1), F.size(arr))).cast("string"),
-                )
-                for d, arr in dest_arrays.items()
-                if d in schema.columns
-            }
-            orig_over = {
-                d: F.when(v.isNotNull(), v) for d, v in orig_values.items()
-            }
-            merged = {**concept_over, **orig_over, **common}
-            # drop null-valued overrides back to defaults inside the struct
-            merged = {
-                d: F.coalesce(
-                    v,
-                    F.lit("0") if d in schema.notnull_numeric_fields else F.lit(""),
-                )
-                for d, v in merged.items()
-            }
-            recs.append(self._record_struct(schema, merged, self._lit(first_field), self._lit(k)))
-        full = F.array(*recs)
-        return F.when(n_records > 0, F.slice(full, 1, n_records)).otherwise(
-            _empty_like(recs[0])
-        )
-
+        return F.expr(records)
 
     def _person_records_col_v1(
         self,
@@ -2343,31 +2151,25 @@ class CarrotPlanner:
         concept assignments overwrite, so each dest takes the LAST concept id
         of its matched list; original values apply only when the field's
         value matched; later fields win dest collisions."""
-        common = self._common_column_values(df, tm, schema, raw_date_field)
+        common = self._common_values_sql(df, tm, schema, raw_date_field)
         fields = list(tm.concept_mappings.items())
-        template = self._record_struct(schema, common, F.lit(""), F.lit(0))
-        if not fields:
-            return _empty_like(template)
-        first_field = fields[0][0]
-        first_cell = _try_resolve(df, first_field)
-        if first_cell is None:
-            return _empty_like(template)
-        gate = F.coalesce(valid_value(first_cell), F.lit(False))
-
+        first_cell = _try_resolve_name(df, fields[0][0]) if fields else None
         chosen = _v1_chosen_buckets(tm)
+        if first_cell is None or chosen == []:
+            return self._empty_records_col(schema)
+        first_field = fields[0][0]
+
         if chosen is not None:
             # dictkeys order (core.py:49-59): the '<file>~person' dict bucket
             # first, then the scalar bucket keyed on the FIRST datacol — ONE
             # record per consulted bucket; other scalar buckets are dead
             # rules (their srckey never matches the first datacol)
-            if not chosen:
-                return _empty_like(template)
             pid_key = (
                 tm.person_id_mapping.dest_field if tm.person_id_mapping else None
             )
             main_dt, _ = self._file_main_fields(tm.source_table)
 
-            def bucket_common(b) -> dict[str, Column]:
+            def bucket_common(b) -> dict[str, str]:
                 # common holds ONLY person-id + date writes; a bucket whose
                 # rule-sets never mapped them leaves the defaults (blank pid
                 # record is later rejected at the person lookup). Both the
@@ -2376,31 +2178,26 @@ class CarrotPlanner:
                 # may map them from different columns; the last data-dict
                 # entry wins the write) — the date normalised in place only
                 # when the bucket's source IS the file's main datetime column
-                out: dict[str, Column] = {}
+                out: dict[str, str] = {}
                 if b.maps_date and tm.date_mapping is not None:
-                    if b.date_fields and b.date_fields[-1] != tm.date_mapping.source_field:
-                        f = b.date_fields[-1]
-                        b_tm = dc_replace(
-                            tm,
-                            date_mapping=dc_replace(tm.date_mapping, source_field=f),
-                        )
-                        dates = self._common_column_values(
-                            df, b_tm, schema, None if f == main_dt else f
-                        )
-                    else:
-                        dates = common
-                    for k, v in dates.items():
-                        if k != pid_key:
-                            out[k] = v
+                    f = b.date_fields[-1] if b.date_fields else tm.date_mapping.source_field
+                    dates = self._date_values_sql(
+                        df,
+                        schema,
+                        tm.target_table,
+                        [(None if f == main_dt else f, d) for d in tm.date_mapping.dest_fields],
+                        set(tm.date_mapping.companions()),
+                    )
+                    out.update((k, v) for k, v in dates.items() if k != pid_key)
                 if pid_key is not None and pid_key in schema.columns and b.maps_person_id:
                     src_f = (
                         b.pid_fields[-1]
                         if b.pid_fields
                         else tm.person_id_mapping.source_field
                     )
-                    cell = _try_resolve(df, src_f)
+                    cell = _try_resolve_name(df, src_f)
                     if cell is not None:
-                        out[pid_key] = cell
+                        out[pid_key] = _sql_ident(cell)
                 return out
 
             recs = [
@@ -2410,36 +2207,44 @@ class CarrotPlanner:
                 )
                 for i, b in enumerate(chosen)
             ]
-            return F.when(gate, F.array(*recs)).otherwise(_empty_like(recs[0]))
-
-        rec = self._v1_person_record(df, fields, schema, common, first_field)
-        return F.when(gate, F.array(rec)).otherwise(_empty_like(rec))
+        else:
+            recs = [self._v1_person_record(df, fields, schema, common, first_field)]
+        return F.expr(
+            f"CASE WHEN COALESCE(trim({_sql_ident(first_cell)}) != '', false) "
+            f"THEN array({', '.join(recs)}) ELSE {self._empty_arr_sql(recs[0])} END"
+        )
 
     def _v1_person_record(
         self,
         df: DataFrame,
         fields: list,
         schema: TableSchema,
-        common: dict[str, Column],
+        common: dict[str, str],
         first_field: str,
         combo_idx: int = 0,
-    ) -> Column:
+    ) -> str:
         """One person record struct from one rules element (core.py:67-156
         applied to a single out_data_elem)."""
-        overrides: dict[str, Column] = {}
-        for fname, cm in fields:  # later fields overwrite on collision
-            cell = _try_resolve(df, fname)
-            if cell is not None:
-                # csv.reader yields '' for empty cells (never None): blank
-                # coalesce so ''-keyed dict matches and blank copies behave
-                cell = F.coalesce(cell, F.lit(""))
-            if cell is None:
+        overrides: dict[str, str] = {}
+
+        def write(d: str, piece: str) -> None:
+            # later fields overwrite on collision; a NULL piece falls back
+            # to the earlier write
+            prev = overrides.get(d)
+            overrides[d] = f"COALESCE({piece}, {prev})" if prev is not None else piece
+
+        for fname, cm in fields:
+            cname = _try_resolve_name(df, fname)
+            if cname is None:
                 # a mapped field missing from the header: the reference
                 # CRASHES here (core.py:105 reads srcdata for the date
                 # handling of every list-kind field) — skipping the field
                 # is our graceful superset of an unrunnable shape
                 continue
-            exact = {v: m for v, m in cm.value_mappings.items() if v != "*"}
+            # csv.reader yields '' for empty cells (never None): blank
+            # coalesce so ''-keyed dict matches and blank copies behave
+            cell = f"COALESCE({_sql_ident(cname)}, '')"
+            exact = [v for v in cm.value_mappings if v != "*"]
             wild = cm.value_mappings.get("*")
             dests: list[str] = []
             for dmap in cm.value_mappings.values():
@@ -2447,73 +2252,60 @@ class CarrotPlanner:
                     if d not in dests:
                         dests.append(d)
             for d in dests:
-                branch = None
-                for value, dmap in exact.items():
-                    ids = dmap.get(d)
-                    val = self._lit(str(ids[-1])) if ids else F.lit(None).cast("string")
-                    cond = cell == self._lit(value)
-                    branch = F.when(cond, val) if branch is None else branch.when(cond, val)
-                if wild and wild.get(d):
-                    wild_val = F.lit(str(wild[d][-1]))
-                    branch = branch.otherwise(wild_val) if branch is not None else wild_val
-                if branch is None:
+                branches = []
+                for value in exact:
+                    ids = cm.value_mappings[value].get(d)
+                    val = _sql_str(str(ids[-1])) if ids else "CAST(NULL AS STRING)"
+                    branches.append(f"WHEN {cell} = {_sql_str(value)} THEN {val}")
+                wild_val = _sql_str(str(wild[d][-1])) if wild and wild.get(d) else None
+                if not branches and wild_val is None:
                     continue
                 # NO validity gate: person dict matching is bare equality
                 # ('if str(input_value) in outfield_list', core.py:80) — a
                 # dict keyed on the EMPTY string matches blank cells; only
                 # the FIRST datacol carries a valid-value requirement
-                prev = overrides.get(d)
-                overrides[d] = F.coalesce(branch, prev) if prev is not None else branch
+                if not branches:
+                    write(d, wild_val)
+                else:
+                    tail = f" ELSE {wild_val}" if wild_val is not None else ""
+                    write(d, f"CASE {' '.join(branches)}{tail} END")
             # value-gated plain copies: a plain dest of a dict-mapped field
             # rides exactly ONE value's entry list in the reference's person
             # data (the stale-inputvalue attach — see ir.ConceptMapping), so
             # it writes only when the row's cell IS that value
             for value, vdests in cm.value_original_fields.items():
-                cond = cell == self._lit(value)
                 for d in vdests:
-                    if d not in schema.columns:
-                        continue
-                    piece = F.when(cond, cell)
-                    prev = overrides.get(d)
-                    overrides[d] = F.coalesce(piece, prev) if prev is not None else piece
+                    if d in schema.columns:
+                        write(d, f"CASE WHEN {cell} = {_sql_str(value)} THEN {cell} END")
             # v1 person scalar terms ride the field's plain LIST and apply
             # UNCONDITIONALLY (core.py list-kind entries have no valid-value
             # check — the literal lands even on a blank cell); later fields
             # still win dest collisions via the coalesce chain
             for d, lit in getattr(cm, "extra_literals", {}).items():
-                if d not in schema.columns:
-                    continue
-                prev = overrides.get(d)
-                piece = self._lit(lit).cast("string")
-                overrides[d] = F.coalesce(piece, prev) if prev is not None else piece
+                if d in schema.columns:
+                    write(d, _sql_str(str(lit)))
             if cm.original_value_fields:
-                matched = None
-                for value in exact:
-                    c = cell == self._lit(value)
-                    matched = c if matched is None else (matched | c)
                 if wild:
-                    matched = F.lit(True) if matched is None else F.lit(True)
-                if matched is None and cm.value_mappings:
+                    matched = None  # any value matches: same as unconditional
+                elif exact:
+                    matched = " OR ".join(f"{cell} = {_sql_str(v)}" for v in exact)
+                elif cm.value_mappings:
                     continue
-                # a field with NO value mappings at all is list-kind in the
-                # reference and its plain copies apply to EVERY row
-                # UNCONDITIONALLY — a blank cell writes '' and CLOBBERS an
-                # earlier field's non-blank write on a dest collision
-                # (core.py's list application has no valid-value check;
-                # later data entries simply overwrite tgtarray)
+                else:
+                    # a field with NO value mappings at all is list-kind in
+                    # the reference and its plain copies apply to EVERY row
+                    # UNCONDITIONALLY — a blank cell writes '' and CLOBBERS
+                    # an earlier field's non-blank write on a dest collision
+                    # (core.py's list application has no valid-value check;
+                    # later data entries simply overwrite tgtarray)
+                    matched = None
                 for d in cm.original_value_fields:
-                    if d not in schema.columns:
-                        continue
-                    if matched is None:
-                        piece = F.coalesce(cell, F.lit(""))
-                    else:
-                        piece = F.when(matched, F.coalesce(cell, F.lit("")))
-                    prev = overrides.get(d)
-                    overrides[d] = F.coalesce(piece, prev) if prev is not None else piece
+                    if d in schema.columns:
+                        write(d, cell if matched is None else f"CASE WHEN {matched} THEN {cell} END")
 
         merged = {
-            d: F.coalesce(
-                v, F.lit("0") if d in schema.notnull_numeric_fields else F.lit("")
+            d: "COALESCE({}, {})".format(
+                v, "'0'" if d in schema.notnull_numeric_fields else "''"
             )
             for d, v in overrides.items()
         }
@@ -2521,7 +2313,7 @@ class CarrotPlanner:
         # combo_idx orders the dict-bucket record before the scalar-bucket
         # record within a row (dense-id sort key [file, line, fieldidx,
         # combo]) — the reference writes them in dictkeys order
-        return self._record_struct(schema, merged, F.lit(first_field), F.lit(combo_idx))
+        return self._record_struct_sql(schema, merged, first_field, combo_idx, 0)
 
 
 # ---------------------------------------------------------------------------
@@ -2619,6 +2411,11 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def _sql_str_array(ids) -> str:
+    """array<string> literal of concept ids."""
+    return f"array({', '.join(_sql_str(str(x)) for x in ids)})"
+
+
 def _sql_ident(name: str) -> str:
     """Backtick-quoted column reference."""
     return "`" + name.replace("`", "``") + "`"
@@ -2637,7 +2434,3 @@ def _concept_match(cell: Column, cm) -> Column:
         out = out | c
     return out
 
-
-def _empty_like(template: Column) -> Column:
-    """Typed empty array matching a struct template."""
-    return F.filter(F.array(template), lambda _: F.lit(False))

@@ -17,6 +17,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from carrot_transform_spark.session import broadcast_threshold
+
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 
@@ -232,20 +234,7 @@ def maybe_broadcast(df: DataFrame, size_like: DataFrame | None = None) -> DataFr
     returning the frame un-hinted, never by treating it as 'unlimited'."""
     import pyspark.sql.functions as F
 
-    try:
-        spark = df.sparkSession
-        raw = str(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        ).lower().strip()
-        mult = 1
-        for suf, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                       ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-            if raw.endswith(suf):
-                raw, mult = raw[: -len(suf)], m
-                break
-        threshold = int(raw) * mult
-    except Exception:
-        threshold = 10 << 20
+    threshold = broadcast_threshold(df.sparkSession)
     if threshold < 0:
         return df
     try:

@@ -71,6 +71,31 @@ def derive_shuffle_partitions(sf_dir: str, floor: int | None = None) -> int:
     return min(max(rounded, floor), _MAX_AUTO_PARTITIONS)
 
 
+_SIZE_SUFFIXES = (
+    ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
+    ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1),
+)
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes,
+    size suffixes accepted ("64m", "1b"). Negative is Spark's sentinel for
+    DISABLED auto-broadcast. An unreadable value reads as Spark's 10 MiB
+    default."""
+    raw = str(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    ).lower().strip()
+    mult = 1
+    for suf, m in _SIZE_SUFFIXES:
+        if raw.endswith(suf):
+            raw, mult = raw[: -len(suf)], m
+            break
+    try:
+        return int(raw) * mult
+    except ValueError:
+        return 10 << 20
+
+
 def get_spark(
     app_name: str = "carrot-transform-spark",
     master: str | None = None,

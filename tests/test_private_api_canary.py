@@ -63,3 +63,25 @@ def test_maybe_broadcast_respects_stats_end_to_end(spark):
         assert "ResolvedHint" not in plan and "UnresolvedHint" not in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_prefer_shuffle_hash_sizes_cached_index(spark):
+    """prefer_shuffle_hash's stats probe on a MATERIALIZED cached index:
+    above a small threshold it must choose the hint. A broken probe falls
+    back to False (keep the planner's choice), which fails this test; a
+    negative threshold (broadcast disabled) hints without the probe."""
+    from carrot_transform_spark.operators.dedup import prefer_shuffle_hash
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    index = spark.range(20_000).withColumn("pad", F.lit("z" * 32)).persist()
+    try:
+        index.count()
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1kb")
+        assert prefer_shuffle_hash(index) is True
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1gb")
+        assert prefer_shuffle_hash(index) is False
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        assert prefer_shuffle_hash(index) is True
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        index.unpersist()

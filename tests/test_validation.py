@@ -75,6 +75,44 @@ def test_run_transform_rejects_wrong_person(spark):
         )
 
 
+
+def test_run_transform_logs_missing_input_file(spark, tmp_path, caplog):
+    """A rules file naming a source file absent from the inputs directory
+    is reported through the pipeline's logger (not stdout) before the run
+    tries to read it."""
+    import json
+    import logging
+
+    from pyspark.errors import AnalysisException
+
+    from carrot_transform_spark.pipeline import run_transform
+    from tests.test_differential_fuzz import _gen_case, _src
+
+    rules_file, inputs = _gen_case(0, tmp_path)
+    rules = json.loads(rules_file.read_text())
+    rules["cdm"]["observation"]["ghost"] = {
+        "person_id": _src("pid", "ghost.csv"),
+        "observation_datetime": _src("when", "ghost.csv"),
+        "observation_concept_id": _src("code", "ghost.csv", mapping=9100),
+    }
+    rules_file.write_text(json.dumps(rules))
+    with caplog.at_level(logging.WARNING, logger="carrot_transform_spark.pipeline"):
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            run_transform(
+                spark,
+                rules_file=rules_file,
+                inputs=inputs,
+                output_dir=None,
+                person_table="demo",
+                write_outputs=False,
+            )
+    msgs = [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == "carrot_transform_spark.pipeline" and r.levelno == logging.WARNING
+    ]
+    assert any("'ghost' not present" in m for m in msgs), msgs
+
 def test_mireda_key_error_message():
     """Error-text parity with the reference for multi-source person rules
     (reference tests/test_integration.py:61-99, cli run.py:102): exact
