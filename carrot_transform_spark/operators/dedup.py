@@ -24,7 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from carrot_transform_spark.functions.rounding import fround
-from carrot_transform_spark.session import broadcast_threshold
+from carrot_transform_spark.session import broadcast_threshold, plan_size_bytes
 
 # _constraint_propagation_off is re-entrant across DRIVER THREADS: suite
 # builders run from a thread pool (queries/__init__.register_suite) and the
@@ -214,12 +214,11 @@ def prefer_shuffle_hash(index: DataFrame) -> bool:
     threshold = broadcast_threshold(index.sparkSession)
     if threshold < 0:
         return True
-    try:
-        size = int(index._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
+    size = plan_size_bytes(index)
+    if size is None:
         logging.getLogger(__name__).warning(
             "prefer_shuffle_hash: plan-size stats unavailable; keeping the "
-            "planner's join choice", exc_info=True,
+            "planner's join choice"
         )
         return False
     return size > threshold

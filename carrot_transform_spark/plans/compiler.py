@@ -11,11 +11,19 @@ One plan per OMOP target table:
              merged across fields for person (later-field-wins)
              clamped-zip combination explode (X1)
              original-value / person-id / date assembly (P1-P3, D1-D4)
-           == ONE transform()+explode over literal-driven expressions:
-           one scan, no join, no shuffle (rules are compiled INTO the plan
-           as when-chains — cheaper than broadcasting a 10-row dict table)
+           == ONE explode over one SQL record-array expression per block.
+           Each field's term map compiles into one of three bands, by
+           exact-valued mapping count: a when-chain inlined in the plan
+           (< 16 values), element_at over a constant map literal (16-99,
+           and every field of a WIDE target), or a broadcast rules-table
+           join (100 and up)
+      (wide targets: same-shape blocks share ONE template over the union
+       of their scans, per-file rules hoisted into a broadcast table)
     union files per target (implicit UNION ALL)
-      -> dense auto-number ids in write order (W1, scalable range-id op)
+      -> dense auto-number ids in write order (W1, operators/ids.py: one
+         window when the bound is small, the bucket path when the source
+         carries a line bucket, else a sizing count, then one window when
+         small or the range path)
       -> person-map broadcast join (J2; anti-join rejects counted)
 
 All data-plane values stay strings for byte-parity with the reference's
@@ -28,8 +36,11 @@ orchestrator.py.
 from __future__ import annotations
 
 import threading as _threading
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager as _contextmanager
 from dataclasses import dataclass, field as dc_field, replace as dc_replace
+from functools import partial, reduce
+from operator import and_
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -90,9 +101,11 @@ class CarrotPlanner:
         self.group_same_shape = group_same_shape
         self.last_used_ids = last_used_ids or {}
         self._counted_files: set[str] = set()
-        # normalized-scan memo: (source file, date source field) -> cached DF,
-        # shared across targets so each file is scanned+normalised once
-        self._norm_cache: dict[tuple[str, str | None], DataFrame] = {}
+        # normalized-scan memo, shared across targets so each file is
+        # scanned+normalised once: (source file, date source field) per
+        # block; (file ordinals, date field, columns, components) per
+        # same-shape group
+        self._norm_cache: dict[tuple, DataFrame] = {}
         # every DataFrame this planner persisted, released via release()
         self._persisted: list[DataFrame] = []
         # deferred metric aggregations, flushed as ONE combined job per
@@ -108,9 +121,6 @@ class CarrotPlanner:
         # rows-callback) — flushed as ONE groupBy(file ordinal) job per
         # (group, target) instead of one job per source file
         self._pending_group_aggs: list[tuple[DataFrame, list[Column], object]] = []
-        # grouped-template norm scans, shared across targets reading the
-        # same file set: (file ordinals, date field) -> persisted union
-        self._group_norm_cache: dict[tuple, DataFrame] = {}
         self._pending_rejects: list[tuple[DataFrame, RejectStats]] = []
         self._metrics_seq = 0
         self._main_fields_memo: dict[str, tuple[str | None, str | None]] = {}
@@ -179,6 +189,24 @@ class CarrotPlanner:
         except Exception:
             return True
 
+    def _v2_skips_file(self, src_file: str, df: DataFrame) -> bool:
+        """v2 skips the whole FILE when its main date/person sources are
+        unresolved (orchestrator.py:85-101: file_meta gate + missing
+        datetime column) — no records, no row metrics. v1 has no such
+        gate."""
+        main_dt, main_pid = self._file_main_fields(src_file)
+        return self.rules.dialect == "v2" and (
+            main_dt is None or main_pid is None or _try_resolve(df, main_dt) is None
+        )
+
+    def _comp_dests(self, tm: TableMapping) -> list[str]:
+        """The target's date dests that carry year/month/day components —
+        the ones whose strict-date check gates records (D3)."""
+        comp = self.omop.date_components(tm.target_table)
+        return [
+            d for d in (tm.date_mapping.dest_fields if tm.date_mapping else []) if d in comp
+        ]
+
     def _needed_file_columns(self, src_file: str, df: DataFrame) -> list[str] | None:
         """The source columns any target mapping of this file can reference,
         resolved case-insensitively against the header — the projection for
@@ -188,48 +216,18 @@ class CarrotPlanner:
         of the file (the cache is shared across them) and over the v1
         person-bucket model. Returns None (keep everything) when nothing
         prunes or the walk is uncertain."""
-
-        def _add(keep: set[str], name: str | None) -> None:
-            if name:
-                actual = _try_resolve_name(df, name)
-                if actual is not None:
-                    keep.add(actual)
-
-        def _add_cm(keep: set[str], cm) -> None:
-            _add(keep, cm.source_field)
-            for _d, fld in getattr(cm, "copy_fields", ()):
-                _add(keep, fld)
-            for fld in getattr(cm, "companion_term_fields", ()):
-                _add(keep, fld)
-            for s, _d in getattr(cm, "date_writes", ()):
-                _add(keep, s)
-
         try:
-            keep: set[str] = set()
-            main_dt, main_pid = self._file_main_fields(src_file)
-            _add(keep, main_dt)
-            _add(keep, main_pid)
+            names = list(self._file_main_fields(src_file))
             for target in self.rules.targets_for_source(src_file):
                 tm = self.rules.mappings[target][src_file]
-                if tm.person_id_mapping:
-                    _add(keep, tm.person_id_mapping.source_field)
-                if tm.date_mapping:
-                    _add(keep, tm.date_mapping.source_field)
-                for cm in tm.concept_mappings.values():
-                    _add_cm(keep, cm)
+                names += _mapping_source_columns(tm)
                 for b in tm.v1_person_buckets or ():
-                    _add(keep, b.key_field)
-                    for f in b.pid_fields:
-                        _add(keep, f)
-                    for f in b.date_fields:
-                        _add(keep, f)
+                    names += [b.key_field, *b.pid_fields, *b.date_fields]
                     for cm in b.concept_mappings.values():
-                        _add_cm(keep, cm)
-                if tm.person_lookup_sources:
-                    _add(keep, tm.person_lookup_sources[0])
-                    _add(keep, tm.person_lookup_sources[1])
-                for f in tm.v1_date_sources or ():
-                    _add(keep, f)
+                        names += _cm_source_columns(cm)
+                names += tm.person_lookup_sources or ()
+                names += tm.v1_date_sources or ()
+            keep = {_try_resolve_name(df, n) for n in names if n} - {None}
         except Exception:
             return None
         keep.add(LINE_COL)
@@ -250,7 +248,6 @@ class CarrotPlanner:
                 pass
         self._persisted.clear()
         self._norm_cache.clear()
-        self._group_norm_cache.clear()
 
     # ------------------------------------------------------------------
     # person anonymisation map (J2/W2)
@@ -354,11 +351,7 @@ class CarrotPlanner:
         # when-chain arrays — the plan stays |values|x smaller and builds
         # in O(fields) py4j round trips (the 50x20 compile-budget shape)
         total_pairs = sum(
-            sum(
-                1
-                for v, m in cm.value_mappings.items()
-                if v != "*" and any(m.values())
-            )
+            len(_exact_rules(cm))
             for tm in per_source.values()
             for cm in tm.concept_mappings.values()
         )
@@ -429,57 +422,36 @@ class CarrotPlanner:
 
         def build(item: tuple[str, TableMapping, DataFrame]) -> DataFrame:
             src_file, tm, df = item
-            part = self._file_records(
-                df, tm, schema, stats, fileidx=global_files.index(src_file),
-                keep_bucket=use_bucket,
+            # Drift tripwire (see _try_resolve_name): within this file's
+            # compile, a resolve MISS on a column the cache projection
+            # dropped is a hard error — the collector and the compile-side
+            # enumeration diverged. Misses on never-existed columns stay
+            # silent (reference semantics), and pre-prune resolves against
+            # the unprojected df can never trigger it (a dropped name always
+            # HITS the unprojected header).
+            proj = self._needed_file_columns(src_file, df)
+            dropped = (
+                frozenset(c.lower() for c in df.columns if c not in set(proj))
+                if proj is not None
+                else None
             )
+            with _pruned_columns_guard(dropped):
+                part = self._file_records(
+                    df, tm, schema, stats, fileidx=global_files.index(src_file),
+                    keep_bucket=use_bucket,
+                )
             part.schema  # force analysis inside the worker thread
             return part
 
-        if len(inputs) > 2:
-            from concurrent.futures import ThreadPoolExecutor
-
-            # pool width 8, not 16: the py4j/analyzer pipeline saturates
-            # around 8 threads and oversubscription costs ~35% (measured
-            # 50-block compile: 16 threads 14.5-15.1 s, 8 threads
-            # 10.7-11.4 s, 4 threads 12.7 s, 1 thread 27.2 s — on a busy
-            # box, scripts/profile_wide_plan.py)
-            with ThreadPoolExecutor(min(8, len(inputs))) as ex:
-                parts = list(ex.map(build, inputs))
-        else:
-            parts = [build(i) for i in inputs]
-        parts = grouped_parts + parts
+        parts = grouped_parts + _thread_map(build, inputs, 3)
         if not parts:
             # every block landed in a group (or there were none): grouped
             # parts always exist when inputs did, so this is unreachable
             # unless the target had no mappings at all
             raise ValueError(f"no mapping blocks for target {target!r}")
-
-        # balanced-tree union, levels threaded: a left-deep chain
-        # re-resolves the growing left plan on every step (quadratic
-        # analysis — ~30 s of the old 50-block compile); the tree analyzes
-        # each part O(log n) times, and sibling unions at one level are
-        # independent so they analyze concurrently (~9.5 s -> ~2.8 s at 50
-        # blocks). Positional union is safe: every part ends in the same
-        # final select, so column order is identical by construction.
-        def union_pair(pair: tuple[DataFrame, DataFrame]) -> DataFrame:
-            merged = pair[0].union(pair[1])
-            merged.schema
-            return merged
-
-        while len(parts) > 1:
-            pairs = [
-                (parts[i], parts[i + 1]) for i in range(0, len(parts) - 1, 2)
-            ]
-            tail = [parts[-1]] if len(parts) % 2 else []
-            if len(pairs) > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(min(8, len(pairs))) as ex:
-                    parts = list(ex.map(union_pair, pairs)) + tail
-            else:
-                parts = [union_pair(p) for p in pairs] + tail
-        out = parts[0]
+        # positional union is safe: every part ends in the same final
+        # select, so column order is identical by construction
+        out = _union_tree(parts)
         auto_col = self.omop.auto_number_col(target)
         if auto_col and auto_col in schema.columns:
             # FIELDIDX (declaration-order ordinal), NOT the field name: the
@@ -521,24 +493,22 @@ class CarrotPlanner:
             # deferred: flush_metrics() unions every target's reject counts
             # into ONE collect instead of one job per (file, target)
             nulls = joined.filter(F.col("target_subject").isNull())
-            if self.rules.dialect == "v2" and target != "person":
-                # v2 StandardRecordBuilder ABORTS the field's build on the
-                # first failed person write (record_builder.py:358-365), so
-                # a ghost person counts invalid_person_ids once per
-                # (row, data column), not once per combo record. The person
-                # builder and all of v1 count per record (no abort:
-                # record_builder.py:243-248, run.py:290-299).
-                rej = (
-                    nulls.groupBy(SRC_COL)
-                    .agg(F.count_distinct(F.col(LINE_COL), F.col(FIELD_COL)).alias("count"))
-                    .withColumn("__ct_tgt", F.lit(target))
-                )
-            else:
-                rej = (
-                    nulls.groupBy(SRC_COL)
-                    .count()
-                    .withColumn("__ct_tgt", F.lit(target))
-                )
+            # v2 StandardRecordBuilder ABORTS the field's build on the first
+            # failed person write (record_builder.py:358-365), so a ghost
+            # person counts invalid_person_ids once per (row, data column),
+            # not once per combo record. The person builder and all of v1
+            # count per record (no abort: record_builder.py:243-248,
+            # run.py:290-299).
+            n = (
+                F.count_distinct(F.col(LINE_COL), F.col(FIELD_COL))
+                if self.rules.dialect == "v2" and target != "person"
+                else F.count(F.lit(1))
+            )
+            rej = (
+                nulls.groupBy(SRC_COL)
+                .agg(n.alias("count"))
+                .withColumn("__ct_tgt", F.lit(target))
+            )
             with self._compile_lock:
                 self._pending_rejects.append((rej, stats))
         return kept
@@ -556,22 +526,16 @@ class CarrotPlanner:
         for f in self._pending_df_aggs:
             by_file.setdefault(f, [])
         for src_file, keys in by_file.items():
-            combined = None
-            entries = []
-            for cache_key in keys:
-                pend = self._pending_aggs[cache_key]
-                entries.extend(pend)
-                frame = self._norm_cache[cache_key].agg(
-                    *[a for cols, _ in pend for a in cols]
-                )
-                combined = frame if combined is None else combined.crossJoin(frame)
-            for dfx, cols, resolve in self._pending_df_aggs.get(src_file, []):
-                entries.append((cols, resolve))
-                frame = dfx.agg(*cols)
-                combined = frame if combined is None else combined.crossJoin(frame)
-            row = combined.collect()[0]
-            for _, resolve in entries:
-                resolve(row)
+            pending = [(self._norm_cache[k], self._pending_aggs[k]) for k in keys]
+            pending += [
+                (dfx, [(cols, resolve)])
+                for dfx, cols, resolve in self._pending_df_aggs.get(src_file, [])
+            ]
+            frames = [frame.agg(*[a for cols, _ in pend for a in cols]) for frame, pend in pending]
+            row = reduce(DataFrame.crossJoin, frames).collect()[0]
+            for _frame, pend in pending:
+                for _, resolve in pend:
+                    resolve(row)
         self._pending_aggs.clear()
         self._pending_df_aggs.clear()
         # grouped-template metrics: one groupBy(file ordinal) job per
@@ -584,10 +548,7 @@ class CarrotPlanner:
         for frame, stats in self._pending_rejects:
             by_stats.setdefault(id(stats), (stats, []))[1].append(frame)
         for stats, frames in by_stats.values():
-            u = frames[0]
-            for f in frames[1:]:
-                u = u.unionByName(f)
-            for r in u.collect():
+            for r in reduce(DataFrame.unionByName, frames).collect():
                 key = (r[SRC_COL], r["__ct_tgt"])
                 stats.invalid_person[key] = stats.invalid_person.get(key, 0) + r["count"]
         self._pending_rejects.clear()
@@ -596,31 +557,84 @@ class CarrotPlanner:
     # record generation for one (source file, target) pair
     # ------------------------------------------------------------------
 
-    def _file_records(
+    def _norm_scan(
         self,
-        df: DataFrame,
-        tm: TableMapping,
-        schema: TableSchema,
-        stats: RejectStats | None,
-        fileidx: int = 0,
-        keep_bucket: bool = False,
+        key: tuple,
+        base: Callable[[], DataFrame],
+        date_field: str | None,
+        needs_comp: bool,
     ) -> DataFrame:
-        # Drift tripwire (see _try_resolve_name): within this file's compile,
-        # a resolve MISS on a column the cache projection dropped is a hard
-        # error — the collector and the compile-side enumeration diverged.
-        # Misses on never-existed columns stay silent (reference semantics),
-        # and pre-prune resolves against the unprojected df can never
-        # trigger it (a dropped name always HITS the unprojected header).
-        proj = self._needed_file_columns(tm.source_table, df)
-        dropped = (
-            frozenset(c.lower() for c in df.columns if c not in set(proj))
-            if proj is not None
-            else None
-        )
-        with _pruned_columns_guard(dropped):
-            return self._file_records_impl(df, tm, schema, stats, fileidx, keep_bucket)
+        """The normalised scan of one source file, or of one same-shape
+        group's union of files, memoized under ``key`` and shared across
+        targets (``base`` builds the input on a miss).
 
-    def _file_records_impl(
+        The main datetime column is normalised into __ct_norm (NULL: the row
+        is date-rejected). Date-derived commons are materialized alongside
+        it, so the record generator can reference them BY NAME, which lets
+        the whole record-array expression be one parsed SQL string instead
+        of tens of thousands of py4j Column round trips
+        (_standard_records_col). Caching also stops projection collapse
+        from inlining the regex-heavy normalise expression into every struct
+        field of the record generator (measured 9s -> ~1s for the record
+        explode at sf0.1)."""
+        with self._compile_lock:
+            scan = self._norm_cache.get(key)
+        if scan is not None:
+            return scan
+        src = base()
+        norm = (
+            normalise_to8601(_resolve(src, date_field))
+            if date_field is not None
+            else F.lit(None).cast("string")
+        ).alias("__ct_norm")
+        d10 = F.substring(F.col("__ct_norm"), 1, 10)
+        aux = [d10.alias("__ct_d10")]
+        if needs_comp:
+            # the y/m/d component columns cost three strict-date parses
+            # per row — only materialize them when some target of the
+            # file(s) can write date components (guide §1.2 step 1: don't
+            # compute what you throw away)
+            sd = strict_date(d10)
+            aux += [
+                F.year(sd).cast("string").alias("__ct_y"),
+                F.month(sd).cast("string").alias("__ct_mo"),
+                F.dayofmonth(sd).cast("string").alias("__ct_dd"),
+            ]
+        # ONE select per step — every extra withColumn re-analyzes the
+        # whole plan
+        scan = src.select("*", norm).select("*", *aux)
+        with self._compile_lock:
+            # double-checked: a racing thread may have built the same scan —
+            # keep the first one so only ONE gets persisted and every target
+            # shares it
+            existing = self._norm_cache.get(key)
+            if existing is not None:
+                return existing
+            if date_field is not None:
+                scan = scan.persist()
+                self._persisted.append(scan)
+            self._norm_cache[key] = scan
+        return scan
+
+    def _claim_row_count(self, src_file: str) -> bool:
+        """True for the first (file, target) pair to ask: input and
+        date-reject rows are counted once per source FILE, not per (file,
+        target) pair (orchestrator.py:136-158 counts at row level before the
+        per-target loop)."""
+        with self._compile_lock:
+            first = src_file not in self._counted_files
+            self._counted_files.add(src_file)
+        return first
+
+    def _metrics_prefix(self) -> str:
+        """A fresh alias prefix for one set of deferred metric aggregations
+        (they share flush jobs, so names must not collide)."""
+        with self._compile_lock:
+            seq = self._metrics_seq
+            self._metrics_seq += 1
+        return f"__m{seq}"
+
+    def _file_records(
         self,
         df: DataFrame,
         tm: TableMapping,
@@ -632,36 +646,13 @@ class CarrotPlanner:
         target = tm.target_table
         src_file = tm.source_table
         is_person = target == "person"
+        # v1 person records come from the consulted person BUCKETS; None on
+        # every other path
+        chosen = (
+            _v1_chosen_buckets(tm) if is_person and self.rules.dialect == "v1" else None
+        )
 
-        # input/date-reject rows are counted once per source FILE, not per
-        # (file, target) pair (orchestrator.py:136-158 counts at row level
-        # before the per-target loop)
-        with self._compile_lock:
-            count_file = stats is not None and src_file not in self._counted_files
-            if count_file:
-                self._counted_files.add(src_file)
-
-        # F2: permissive row-level date normalisation; invalid rows rejected
-        # (orchestrator.py:146-158). The ROW GATE runs on the file's MAIN
-        # datetime column (see _file_main_fields), NOT the target's own date
-        # source; a target whose date source differs gets the raw cell
-        # copied. The normalized scan is cached ONCE per (file, main field)
-        # and shared across targets; caching also stops projection collapse
-        # from inlining the regex-heavy normalise expression into every
-        # struct field of the record generator (measured 9s -> ~1s for the
-        # record explode at sf0.1)
-        main_dt, main_pid = self._file_main_fields(src_file)
-        if self.rules.dialect == "v2" and (
-            main_dt is None
-            or main_pid is None
-            or _try_resolve(df, main_dt) is None
-        ):
-            # v2 skips the whole FILE when its main date/person sources are
-            # unresolved (orchestrator.py:85-101: file_meta gate + missing
-            # datetime column) — no records, no row metrics
-            if count_file:
-                with self._compile_lock:
-                    self._counted_files.discard(src_file)
+        if self._v2_skips_file(src_file, df):
             return df.limit(0).select(
                 *[F.lit("").alias(c) for c in schema.columns],
                 F.lit(src_file).alias(SRC_COL),
@@ -672,153 +663,56 @@ class CarrotPlanner:
                 F.lit(fileidx).alias(FILEIDX_COL),
                 *([F.col(BUCKET_COL)] if keep_bucket else []),
             )
-        date_field = main_dt
-        # the target's own date source; None when it IS the main column, in
-        # which case the normalised __ct_* columns apply
-        raw_date_field = None
-        if tm.date_mapping and tm.date_mapping.source_field != main_dt:
-            raw_date_field = tm.date_mapping.source_field
+        # F2: permissive row-level date normalisation; invalid rows rejected
+        # (orchestrator.py:146-158). The ROW GATE runs on the file's MAIN
+        # datetime column (see _file_main_fields), NOT the target's own date
+        # source; a target whose date source differs gets the raw cell
+        # copied. The normalized scan is cached ONCE per (file, main field)
+        # and shared across targets.
+        date_field, _ = self._file_main_fields(src_file)
+        raw_date_field = _raw_date_source(tm, date_field)
         cache_key = (src_file, date_field)
-        with self._compile_lock:
-            raw = self._norm_cache.get(cache_key)
-        if raw is None:
-            # date-derived commons materialized alongside the normalised
-            # scan (cached once per file): the record generator can then
-            # reference them BY NAME, which lets the whole record-array
-            # expression be one parsed SQL string instead of tens of
-            # thousands of py4j Column round trips
-            # (_standard_records_col). ONE select — every extra withColumn
-            # re-analyzes the whole plan
+
+        def base() -> DataFrame:
             # project the cache to the columns the file's rules can actually
             # reference (guide §2.3: project before the exchange/persist) —
             # the pruning pushes below the spread exchange into the scan, so
             # an unmapped wide payload column costs nothing anywhere
             proj = self._needed_file_columns(src_file, df)
-            base = df.select(*proj) if proj is not None else df
-            norm = (
-                normalise_to8601(_resolve(base, date_field))
-                if date_field is not None
-                else F.lit(None).cast("string")
-            ).alias("__ct_norm")
-            d10 = F.substring(F.col("__ct_norm"), 1, 10)
-            aux = [d10.alias("__ct_d10")]
-            if self._file_needs_date_components(src_file):
-                # the y/m/d component columns cost three strict-date parses
-                # per row — only materialize them when some target of this
-                # file can write date components (guide §1.2 step 1: don't
-                # compute what you throw away)
-                sd = strict_date(d10)
-                aux += [
-                    F.year(sd).cast("string").alias("__ct_y"),
-                    F.month(sd).cast("string").alias("__ct_mo"),
-                    F.dayofmonth(sd).cast("string").alias("__ct_dd"),
-                ]
-            raw = base.select("*", norm).select("*", *aux)
-            with self._compile_lock:
-                # double-checked: a racing thread may have built the same
-                # file's scan — keep the first one so only ONE gets persisted
-                # and every target shares it
-                existing = self._norm_cache.get(cache_key)
-                if existing is not None:
-                    raw = existing
-                else:
-                    if date_field is not None:
-                        raw = raw.persist()
-                        self._persisted.append(raw)
-                    self._norm_cache[cache_key] = raw
+            return df.select(*proj) if proj is not None else df
 
+        raw = self._norm_scan(
+            cache_key, base, date_field, self._file_needs_date_components(src_file)
+        )
         norm_ok = F.col("__ct_norm").isNotNull() if date_field is not None else F.lit(True)
-
-        # strict component-date check runs on the TARGET's date value: the
-        # normalised main column, or the raw secondary cell split at the
-        # first space (record_builder.py:96-99 get_datetime_value on
-        # source_date.split(" ")[0]); a secondary column missing from the
-        # header writes no dates and can never strict-reject
-        # (record_builder.py:74-79 returns True)
-        def _strict_for(source_f: str | None) -> Column:
-            # per-source strict component check: the MAIN column was
-            # normalised in place (__ct_norm); any other source is checked
-            # on its RAW cell split at the first space; a source missing
-            # from the header writes no dates and can never strict-reject
-            if source_f is None or source_f == date_field:
-                return strict_date_ok(F.substring(F.col("__ct_norm"), 1, 10))
-            c = _try_resolve(raw, source_f)
-            if c is None:
-                return F.lit(True)
-            return strict_date_ok(F.substring_index(c, " ", 1))
-
-        strict_ok_col = _strict_for(raw_date_field)
+        strict_ok_col = _strict_for(raw, date_field, raw_date_field)
 
         def _bucket_date_fields(b) -> list:
             return list(b.date_fields) if b.date_fields else [raw_date_field]
 
-        def _bucket_strict(b) -> Column:
-            # EVERY date entry in the bucket's data runs the component
-            # check (core.py iterates all of them; valid_data_elem goes
-            # False on any failure) — only the WRITE is last-field-wins
-            cond = None
-            for f in _bucket_date_fields(b):
-                c = _strict_for(f)
-                cond = c if cond is None else (cond & c)
-            return cond if cond is not None else F.lit(True)
-
         # ---- metrics: ONE aggregation job per (file, target) computing all
         # row/blank/date counters (was: one .count() job per counter) -------
-        comp = self.omop.date_components(target)
-        comp_dests = [
-            d for d in (tm.date_mapping.dest_fields if tm.date_mapping else []) if d in comp
-        ]
+        comp_dests = self._comp_dests(tm)
         if stats is not None:
-            with self._compile_lock:
-                seq = self._metrics_seq
-                self._metrics_seq += 1
             count_fields: list[str] = []
             if not is_person:
-                # unique DATA COLUMNS in first-appearance order — v1 block
-                # mappings may register several blocks per field under
-                # synthetic keys, and block companions (plain copies and
-                # non-trigger term fields) are datacols too: the reference
-                # iterates every field present in a block's data and counts
-                # its blanks, even though no record is keyed on it
-                seen_cf: dict[str, None] = {}
-                for cm_ in tm.concept_mappings.values():
-                    seen_cf.setdefault(cm_.source_field, None)
-                    for _d, fld_ in getattr(cm_, "copy_fields", []):
-                        seen_cf.setdefault(fld_, None)
-                    for fld_ in getattr(cm_, "companion_term_fields", []):
-                        seen_cf.setdefault(fld_, None)
-                count_fields = list(seen_cf)
+                # v1 block mappings may register several blocks per field
+                # under synthetic keys, and block companions are data
+                # columns too (see _data_columns)
+                count_fields = _data_columns(tm)
             elif self.rules.dialect == "v1" and tm.concept_mappings:
                 # v1 counts the person target's FIRST data column only
                 # (run.py:301-302); v2's person builder never counts blanks
                 count_fields = [next(iter(tm.concept_mappings))]
-            aggs: list[Column] = [F.count(F.lit(1)).alias(f"__m{seq}_rows")]
-            aggs.append(F.sum(F.when(~norm_ok, 1).otherwise(0)).alias(f"__m{seq}_datebad"))
-            blank_keys: list[str] = []
-            for i, fname in enumerate(count_fields):
-                cell = _try_resolve(raw, fname)
-                if cell is None:
-                    continue
-                blank_keys.append(fname)
-                # blank cells counted over date-valid rows (the reference
-                # counts inside the per-record loop, after the row filter)
-                aggs.append(
-                    F.sum(
-                        F.when(norm_ok & ~F.coalesce(valid_value(cell), F.lit(False)), 1).otherwise(0)
-                    ).alias(f"__m{seq}_blank_{len(blank_keys) - 1}")
-                )
-            datebad_keys: list[str] = []
-            if comp_dests and is_person and self.rules.dialect == "v2":
-                # v2 person invalid_date counts once per BUILT COMBO record
-                # of the first-wins row (PersonRecordBuilder builds per
-                # combo, each failing _apply_date_mappings increments,
-                # record_builder.py:241-303) and keys on the triggering data
-                # column = the first mapped field present in the header.
-                # Needs size(records) over the DEDUPED frame — registered
-                # as a frame-level agg after the builder runs (below).
-                pass
-            elif comp_dests:
-                strict_ok = strict_ok_col
+            date_gates: dict[str, tuple] = {}
+            # v2 person invalid_date counts once per BUILT COMBO record of
+            # the first-wins row (PersonRecordBuilder builds per combo, each
+            # failing _apply_date_mappings increments,
+            # record_builder.py:241-303) and keys on the triggering data
+            # column = the first mapped field present in the header. Needs
+            # size(records) over the DEDUPED frame — registered as a
+            # frame-level agg after the builder runs (below).
+            if comp_dests and not (is_person and self.rules.dialect == "v2"):
                 # invalid_date per concept FIELD, gated on the same
                 # valid-value + concept-match conditions that would have
                 # produced records for that field (reference increments per
@@ -827,94 +721,60 @@ class CarrotPlanner:
                 by_field: dict[str, list] = {}
                 for cm_ in tm.concept_mappings.values():
                     by_field.setdefault(cm_.source_field, []).append(cm_)
-                # v1 person: one increment per consulted BUCKET whose data
-                # maps a date dest, each against ITS OWN date source's
-                # strict check (every bucket's record runs core.py's date
-                # handling on the bucket's own column)
-                bucket_stricts: list[Column] | None = None
+                stricts = [strict_ok_col]
+                match_all = False
                 if is_person and self.rules.dialect == "v1":
-                    # record build runs for the FIRST datacol only (run.py
-                    # breaks after person) and proceeds for ANY valid value
-                    # — unmatched terms still reach the component-date check
-                    # (core.py:76-95), so the count has no concept-match gate
+                    # v1 person: one increment per consulted BUCKET whose
+                    # data maps a date dest, each against ITS OWN date
+                    # source's strict check (every bucket's record runs
+                    # core.py's date handling on the bucket's own column).
+                    # The record build runs for the FIRST datacol only
+                    # (run.py breaks after person) and proceeds for ANY
+                    # valid value — unmatched terms still reach the
+                    # component-date check (core.py:76-95), so the count has
+                    # no concept-match gate
                     by_field = dict(list(by_field.items())[:1])
-                    chosen_m = _v1_chosen_buckets(tm)
-                    if chosen_m is not None:
+                    match_all = True
+                    if chosen is not None:
                         # one increment per FAILING date field per record
                         # (the check loop has no break)
-                        bucket_stricts = [
-                            _strict_for(f)
-                            for b in chosen_m
+                        stricts = [
+                            _strict_for(raw, date_field, f)
+                            for b in chosen
                             if b.maps_date
                             for f in _bucket_date_fields(b)
                         ]
-                        if not bucket_stricts:
+                        if not stricts:
                             by_field = {}
                 for fname, cms in by_field.items():
-                    cell = _try_resolve(raw, fname)
-                    if cell is None:
-                        continue
-                    if is_person and self.rules.dialect == "v1":
-                        match = F.lit(True)
-                    else:
-                        match = _concept_match(cell, cms[0])
-                        for cm_ in cms[1:]:
-                            match = match | _concept_match(cell, cm_)
-                    base_gate = F.coalesce(valid_value(cell), F.lit(False)) & match
-                    stricts = bucket_stricts if bucket_stricts is not None else [strict_ok]
-                    expr = None
-                    for sc in stricts:
-                        piece = F.when(norm_ok & ~sc & base_gate, 1).otherwise(0)
-                        expr = piece if expr is None else expr + piece
-                    datebad_keys.append(fname)
-                    aggs.append(
-                        F.sum(expr).alias(f"__m{seq}_datebad_{len(datebad_keys) - 1}")
+                    match = (
+                        (lambda _cell: F.lit(True))
+                        if match_all
+                        else partial(_concept_match, cms=cms)
                     )
-
-            def resolve(
-                m,
-                seq=seq,
-                src_file=src_file,
-                target=target,
-                stats=stats,
-                count_file=count_file,
-                blank_keys=tuple(blank_keys),
-                datebad_keys=tuple(datebad_keys),
-            ) -> None:
-                if count_file:
-                    stats.input_rows[src_file] = (
-                        stats.input_rows.get(src_file, 0) + m[f"__m{seq}_rows"]
-                    )
-                    if m[f"__m{seq}_datebad"]:
-                        stats.date_reject_rows[src_file] = (
-                            stats.date_reject_rows.get(src_file, 0) + m[f"__m{seq}_datebad"]
-                        )
-                for i, fname in enumerate(blank_keys):
-                    n_blank = m[f"__m{seq}_blank_{i}"]
-                    if n_blank:
-                        key = (src_file, target, fname)
-                        stats.invalid_source[key] = stats.invalid_source.get(key, 0) + n_blank
-                for i, fname in enumerate(datebad_keys):
-                    n_bad = m[f"__m{seq}_datebad_{i}"]
-                    if n_bad:
-                        key = (src_file, target, fname)
-                        stats.invalid_date[key] = stats.invalid_date.get(key, 0) + n_bad
-
+                    date_gates[fname] = (match, stricts)
+            prefix = self._metrics_prefix()
+            aggs, blank_keys, datebad_keys = _metric_aggs(
+                raw, prefix, norm_ok, count_fields, date_gates
+            )
+            resolve = partial(
+                _add_file_metrics,
+                stats,
+                prefix,
+                src_file,
+                target,
+                self._claim_row_count(src_file),
+                blank_keys,
+                datebad_keys,
+            )
             # deferred: flush_metrics() runs every target's counters over
             # this file's cached scan in ONE combined aggregation job
             with self._compile_lock:
                 self._pending_aggs.setdefault(cache_key, []).append((aggs, resolve))
 
-        df = raw.filter(norm_ok) if date_field is not None else raw
-        if date_field is not None:
-            # the reference normalises the MAIN datetime column IN PLACE
-            # (run.py:230-233 / orchestrator.py:141-152) BEFORE record
-            # building, so every later read of that column — plain copies,
-            # original values, term matching — sees the normalised value;
-            # overwrite it with __ct_norm so all builders inherit that
-            mc = _try_resolve_name(df, date_field)
-            if mc is not None:
-                df = df.withColumn(mc, F.col("__ct_norm"))
+        # the reference normalises the MAIN datetime column IN PLACE
+        # (run.py:230-233 / orchestrator.py:141-152) BEFORE record building
+        df = _date_valid_rows(raw, date_field)
 
         if is_person and tm.person_id_mapping is not None and self.rules.dialect == "v2":
             # J3: one person record per (source file, person id) — first row
@@ -947,24 +807,15 @@ class CarrotPlanner:
                     None,
                 )
                 if fld is not None:
-                    with self._compile_lock:
-                        seq2 = self._metrics_seq
-                        self._metrics_seq += 1
-                    pname = f"__m{seq2}_pdatebad"
+                    prefix = self._metrics_prefix()
                     aggs2 = [
                         F.sum(
                             F.when(~strict_ok_col, F.size(records)).otherwise(0)
-                        ).alias(pname)
+                        ).alias(f"{prefix}_datebad_0")
                     ]
-
-                    def resolve2(
-                        m, pname=pname, src_file=src_file, target=target, fld=fld, stats=stats
-                    ) -> None:
-                        n = m[pname]
-                        if n:
-                            key = (src_file, target, fld)
-                            stats.invalid_date[key] = stats.invalid_date.get(key, 0) + n
-
+                    resolve2 = partial(
+                        _add_file_metrics, stats, prefix, src_file, target, False, (), (fld,)
+                    )
                     with self._compile_lock:
                         self._pending_df_aggs.setdefault(src_file, []).append(
                             (df, aggs2, resolve2)
@@ -976,55 +827,40 @@ class CarrotPlanner:
             # doesn't produce a pathological expression tree
             df, attached = self._attach_large_rules(df, tm)
             records = self._standard_records_col(df, tm, schema, attached, raw_date_field)
-        # explode_outer + null-filter, NOT explode: plain explode's implicit
-        # size()>0 predicate gets pushed below upstream exchanges and
-        # re-evaluates the entire record-generation expression per row
-        exploded = df.withColumn("__ct_rec", F.explode_outer(records)).filter(
-            F.col("__ct_rec").isNotNull()
-        )
 
         # strict-date component failure drops the whole row's records for
         # this target (record_builder.py:92-132); the per-field counts were
         # folded into the metrics aggregation above. v1 person: the gate is
         # per consulted BUCKET — a bucket whose rule-sets never mapped a date
         # dest skips core.py's date handling and its record always survives
-        if comp_dests:
-            chosen_f = (
-                _v1_chosen_buckets(tm)
-                if is_person and self.rules.dialect == "v1"
-                else None
-            )
-            if chosen_f is None:
-                exploded = exploded.filter(strict_ok_col)
-            elif chosen_f:
-                srcs = {
-                    f for b in chosen_f if b.maps_date for f in _bucket_date_fields(b)
-                }
-                if len(srcs) == 1 and all(b.maps_date for b in chosen_f):
-                    # every record gated on the same source: one flat filter
-                    exploded = exploded.filter(_strict_for(next(iter(srcs))))
-                elif srcs:
-                    combo = F.col(f"__ct_rec.{COMBO_COL}")
-                    gate = F.lit(False)
-                    for i, b in enumerate(chosen_f):
-                        g = _bucket_strict(b) if b.maps_date else F.lit(True)
-                        gate = gate | ((combo == i) & g)
-                    exploded = exploded.filter(gate)
-
-        cols = [F.col(f"__ct_rec.{c}").alias(c) for c in schema.columns]
-        meta = [
-            F.lit(src_file).alias(SRC_COL),
-            F.col(f"__ct_rec.{FIELD_COL}").alias(FIELD_COL),
-            F.col(f"__ct_rec.{FIELDIDX_COL}").alias(FIELDIDX_COL),
-            F.col(f"__ct_rec.{COMBO_COL}").alias(COMBO_COL),
-            F.col(LINE_COL),
-            # folded into this select — a trailing withColumn would
-            # re-analyze the whole record projection once more per file
-            F.lit(fileidx).alias(FILEIDX_COL),
-        ]
-        if keep_bucket:
-            meta.append(F.col(BUCKET_COL))  # dense-id bucket rider
-        return exploded.select(*cols, *meta)
+        gate = None
+        if comp_dests and chosen is None:
+            gate = strict_ok_col
+        elif comp_dests and chosen:
+            srcs = {f for b in chosen if b.maps_date for f in _bucket_date_fields(b)}
+            if len(srcs) == 1 and all(b.maps_date for b in chosen):
+                # every record gated on the same source: one flat filter
+                gate = _strict_for(raw, date_field, next(iter(srcs)))
+            elif srcs:
+                combo = F.col(f"__ct_rec.{COMBO_COL}")
+                gate = F.lit(False)
+                for i, b in enumerate(chosen):
+                    # EVERY date entry in the bucket's data runs the
+                    # component check (core.py iterates all of them;
+                    # valid_data_elem goes False on any failure) — only the
+                    # WRITE is last-field-wins
+                    g = (
+                        reduce(
+                            and_,
+                            [_strict_for(raw, date_field, f) for f in _bucket_date_fields(b)],
+                        )
+                        if b.maps_date
+                        else F.lit(True)
+                    )
+                    gate = gate | ((combo == i) & g)
+        return _records_frame(
+            df, records, gate, schema, F.lit(src_file), F.lit(fileidx), keep_bucket
+        )
 
     # -- same-shape block grouping (WIDE targets) -----------------------
     #
@@ -1054,21 +890,17 @@ class CarrotPlanner:
         into separate groups instead of hoisting) is part of the key."""
         if tm.target_table == "person":
             return None
-        main_dt, main_pid = self._file_main_fields(src_file)
-        if self.rules.dialect == "v2":
-            if main_dt is None or main_pid is None or _try_resolve(df, main_dt) is None:
-                return None  # v2 file-skip gate -> cheap per-block empty frame
-        else:
+        main_dt, _ = self._file_main_fields(src_file)
+        if self._v2_skips_file(src_file, df):
+            return None  # v2 file-skip gate -> cheap per-block empty frame
+        if main_dt is None or _try_resolve(df, main_dt) is None:
             # v1 has NO file-skip gate: a file without a resolvable main
             # datetime still emits (no row date-filter). The grouped
             # template always builds the normalised-date scan, so only the
             # dominant dated shape groups; undated v1 files compile
             # per-block.
-            if main_dt is None or _try_resolve(df, main_dt) is None:
-                return None
-        raw_date_field = None
-        if tm.date_mapping and tm.date_mapping.source_field != main_dt:
-            raw_date_field = tm.date_mapping.source_field
+            return None
+        raw_date_field = _raw_date_source(tm, main_dt)
         dt = dict(df.dtypes)
 
         def _res(name: str | None):
@@ -1156,15 +988,8 @@ class CarrotPlanner:
         rep_file, rep_tm, rep_df = items[0][0], items[0][1], items[0][2]
         target = rep_tm.target_table
         date_field, _ = self._file_main_fields(rep_file)
-        raw_date_field = None
-        if rep_tm.date_mapping and rep_tm.date_mapping.source_field != date_field:
-            raw_date_field = rep_tm.date_mapping.source_field
-        comp = self.omop.date_components(target)
-        comp_dests = [
-            d
-            for d in (rep_tm.date_mapping.dest_fields if rep_tm.date_mapping else [])
-            if d in comp
-        ]
+        raw_date_field = _raw_date_source(rep_tm, date_field)
+        comp_dests = self._comp_dests(rep_tm)
         need_gate = stats is not None and bool(comp_dests)
 
         rep_keys = list(rep_tm.concept_mappings.keys())
@@ -1178,12 +1003,7 @@ class CarrotPlanner:
         per_block_wildp: list[list[bool]] = [[] for _ in range(n_fields)]
         for _src, tm, _df, _fi in items:
             for i, cm in enumerate(tm.concept_mappings.values()):
-                exact = {
-                    v: {d: [str(x) for x in ids] for d, ids in m.items() if ids}
-                    for v, m in cm.value_mappings.items()
-                    if v != "*"
-                }
-                per_block_exact[i].append({v: m for v, m in exact.items() if m})
+                per_block_exact[i].append(_exact_rules(cm))
                 w = cm.value_mappings.get("*") or {}
                 w = {d: [str(x) for x in ids] for d, ids in w.items() if ids}
                 per_block_wild[i].append(w or None)
@@ -1207,23 +1027,10 @@ class CarrotPlanner:
             if n is not None and n not in needed:
                 needed.append(n)
 
-        mc = _try_resolve_name(rep_df, date_field)
-        _need(mc)  # the norm input; overwritten in place after the filter
-        for cm in rep_tm.concept_mappings.values():
-            _need(_try_resolve_name(rep_df, cm.source_field))
-            # v1 block companions read additional source columns: raw-cell
-            # copies, non-trigger term fields (metrics data columns), and
-            # per-block date-write sources
-            for _d, fld in getattr(cm, "copy_fields", []):
-                _need(_try_resolve_name(rep_df, fld))
-            for fld in getattr(cm, "companion_term_fields", []):
-                _need(_try_resolve_name(rep_df, fld))
-            for s, _d in getattr(cm, "date_writes", []):
-                _need(_try_resolve_name(rep_df, s))
-        if rep_tm.person_id_mapping:
-            _need(_try_resolve_name(rep_df, rep_tm.person_id_mapping.source_field))
-        if raw_date_field is not None:
-            _need(_try_resolve_name(rep_df, raw_date_field))
+        # the norm input (overwritten in place after the filter), then every
+        # source column the mapping reads, v1 block companions included
+        for name in [date_field, *_mapping_source_columns(rep_tm)]:
+            _need(_try_resolve_name(rep_df, name))
         _need(LINE_COL)
 
         fids = tuple(fi for _s, _t, _d, fi in items)
@@ -1235,64 +1042,43 @@ class CarrotPlanner:
         needs_comp = any(
             self._file_needs_date_components(sf) for sf, _t, _d, _fi in items
         )
-        norm_key = (fids, date_field, tuple(needed), needs_comp)
-        u_norm = self._group_norm_cache.get(norm_key)
-        if u_norm is None:
+
+        def union() -> DataFrame:
             parts: list[DataFrame] = []
             for src_file, tm, df, fi in items:
                 sel = [_sql_ident(c) for c in needed]
                 sel.append(f"CAST({int(fi)} AS INT) AS __ct_gfidx")
                 parts.append(df.selectExpr(*sel))
-            while len(parts) > 1:
-                nxt = [
-                    parts[i].union(parts[i + 1]) for i in range(0, len(parts) - 1, 2)
-                ]
-                if len(parts) % 2:
-                    nxt.append(parts[-1])
-                parts = nxt
-            u0 = parts[0]
-            norm = normalise_to8601(_resolve(u0, date_field)).alias("__ct_norm")
-            d10 = F.substring(F.col("__ct_norm"), 1, 10)
-            aux = [d10.alias("__ct_d10")]
-            if needs_comp:
-                sd = strict_date(d10)
-                aux += [
-                    F.year(sd).cast("string").alias("__ct_y"),
-                    F.month(sd).cast("string").alias("__ct_mo"),
-                    F.dayofmonth(sd).cast("string").alias("__ct_dd"),
-                ]
-            u_norm = u0.select("*", norm).select("*", *aux)
-            u_norm = u_norm.persist()
-            self._persisted.append(u_norm)
-            self._group_norm_cache[norm_key] = u_norm
+            return _union_tree(parts)
+
+        u_norm = self._norm_scan(
+            (fids, date_field, tuple(needed), needs_comp), union, date_field, needs_comp
+        )
 
         # ---- per-file rule literals: ONE fileidx-keyed broadcast table ---
         tab_cols: list[str] = ["__ct_gfidx int"]
+        rows: list[list[object]] = [[int(fi)] for fi in fids]
+
+        def hoist(col: str, per_block: list) -> None:
+            tab_cols.append(col)
+            for row, v in zip(rows, per_block):
+                row.append(v)
+
         for i in range(n_fields):
             if any_exact[i] and not large[i]:
-                tab_cols.append(f"__ct_grules_{i} map<string,map<string,array<string>>>")
+                hoist(
+                    f"__ct_grules_{i} map<string,map<string,array<string>>>",
+                    [e or None for e in per_block_exact[i]],
+                )
             if any_wild[i]:
-                tab_cols.append(f"__ct_gwild_{i} map<string,array<string>>")
+                hoist(f"__ct_gwild_{i} map<string,array<string>>", per_block_wild[i])
             if need_gate:
                 if not large[i]:
-                    tab_cols.append(f"__ct_gvals_{i} array<string>")
-                tab_cols.append(f"__ct_gwildp_{i} boolean")
-        rows = []
-        for b, (_s, _t, _d, fi) in enumerate(items):
-            row: list[object] = [int(fi)]
-            for i in range(n_fields):
-                if any_exact[i] and not large[i]:
-                    row.append(per_block_exact[i][b] or None)
-                if any_wild[i]:
-                    row.append(per_block_wild[i][b])
-                if need_gate:
-                    if not large[i]:
-                        row.append(per_block_vals[i][b])
-                    row.append(per_block_wildp[i][b])
-            rows.append(tuple(row))
+                    hoist(f"__ct_gvals_{i} array<string>", per_block_vals[i])
+                hoist(f"__ct_gwildp_{i} boolean", per_block_wildp[i])
         u = u_norm
         if len(tab_cols) > 1:
-            rtab = self.spark.createDataFrame(rows, ", ".join(tab_cols))
+            rtab = self.spark.createDataFrame([tuple(r) for r in rows], ", ".join(tab_cols))
             u = u.join(F.broadcast(rtab), "__ct_gfidx", "left")
 
         # join-band fields: broadcast rules on (file ordinal, value); rows
@@ -1326,144 +1112,60 @@ class CarrotPlanner:
                 "left",
             ).drop(fi_col, val_col)
 
-        norm_ok = F.col("__ct_norm").isNotNull()
-
-        def _strict_for(source_f: str | None) -> Column:
-            if source_f is None or source_f == date_field:
-                return strict_date_ok(F.substring(F.col("__ct_norm"), 1, 10))
-            c = _try_resolve(u, source_f)
-            if c is None:
-                return F.lit(True)
-            return strict_date_ok(F.substring_index(c, " ", 1))
-
         # ---- metrics: ONE groupBy(file ordinal) agg for the whole group --
         if stats is not None:
-            with self._compile_lock:
-                seq = self._metrics_seq
-                self._metrics_seq += 1
-                counted: dict[int, bool] = {}
-                for src_file, _t, _d, fi in items:
-                    cf = src_file not in self._counted_files
-                    if cf:
-                        self._counted_files.add(src_file)
-                    counted[int(fi)] = cf
-            aggs: list[Column] = [F.count(F.lit(1)).alias(f"__g{seq}_rows")]
-            aggs.append(
-                F.sum(F.when(~norm_ok, 1).otherwise(0)).alias(f"__g{seq}_datebad")
-            )
-            seen_cf: dict[str, None] = {}
-            for cm_ in rep_tm.concept_mappings.values():
-                seen_cf.setdefault(cm_.source_field, None)
-                # block companions are data columns too (the per-file path
-                # counts their blanks; v2 blocks never carry these)
-                for _d, fld_ in getattr(cm_, "copy_fields", []):
-                    seen_cf.setdefault(fld_, None)
-                for fld_ in getattr(cm_, "companion_term_fields", []):
-                    seen_cf.setdefault(fld_, None)
-            blank_keys: list[str] = []
-            for fname in seen_cf:
-                cell = _try_resolve(u, fname)
-                if cell is None:
-                    continue
-                blank_keys.append(fname)
-                aggs.append(
-                    F.sum(
-                        F.when(
-                            norm_ok
-                            & ~F.coalesce(valid_value(cell), F.lit(False)),
-                            1,
-                        ).otherwise(0)
-                    ).alias(f"__g{seq}_blank_{len(blank_keys) - 1}")
-                )
-            datebad_keys: list[str] = []
+            counted = {int(fi): self._claim_row_count(sf) for sf, _t, _d, fi in items}
+            date_gates: dict[str, tuple] = {}
             if comp_dests:
-                strict_ok_m = _strict_for(raw_date_field)
+                strict_ok_m = [_strict_for(u, date_field, raw_date_field)]
                 by_field: dict[str, list[int]] = {}
                 for i, cm_ in enumerate(rep_tm.concept_mappings.values()):
                     by_field.setdefault(cm_.source_field, []).append(i)
                 for fname, idxs in by_field.items():
-                    cell = _try_resolve(u, fname)
-                    if cell is None:
-                        continue
-                    match = F.lit(False)
-                    for i in idxs:
-                        if large[i]:
-                            m_i = F.coalesce(
-                                F.col(f"__ct_grmatch_{i}"), F.lit(False)
+
+                    def match(cell: Column, idxs=idxs) -> Column:
+                        # the hoisted per-file value sets / join-band match
+                        # flags stand in for the per-block _concept_match
+                        out = F.lit(False)
+                        for i in idxs:
+                            if large[i]:
+                                m_i = F.coalesce(F.col(f"__ct_grmatch_{i}"), F.lit(False))
+                            else:
+                                m_i = F.coalesce(
+                                    F.array_contains(F.col(f"__ct_gvals_{i}"), cell),
+                                    F.lit(False),
+                                )
+                            out = out | m_i | F.coalesce(
+                                F.col(f"__ct_gwildp_{i}"), F.lit(False)
                             )
-                        else:
-                            m_i = F.coalesce(
-                                F.array_contains(F.col(f"__ct_gvals_{i}"), cell),
-                                F.lit(False),
-                            )
-                        match = match | m_i | F.coalesce(
-                            F.col(f"__ct_gwildp_{i}"), F.lit(False)
-                        )
-                    base_gate = F.coalesce(valid_value(cell), F.lit(False)) & match
-                    datebad_keys.append(fname)
-                    aggs.append(
-                        F.sum(
-                            F.when(norm_ok & ~strict_ok_m & base_gate, 1).otherwise(0)
-                        ).alias(f"__g{seq}_datebad_{len(datebad_keys) - 1}")
-                    )
+                        return out
+
+                    date_gates[fname] = (match, strict_ok_m)
+            prefix = self._metrics_prefix()
+            aggs, blank_keys, datebad_keys = _metric_aggs(
+                u, prefix, F.col("__ct_norm").isNotNull(), _data_columns(rep_tm), date_gates
+            )
             fid2file = {int(fi): sf for sf, _t, _d, fi in items}
 
-            def resolve_rows(
-                rws,
-                seq=seq,
-                target=target,
-                blank_keys=tuple(blank_keys),
-                datebad_keys=tuple(datebad_keys),
-                counted=counted,
-                fid2file=fid2file,
-                stats=stats,
-            ) -> None:
+            def resolve_rows(rws) -> None:
                 seen_fids = set()
                 for m in rws:
                     fi = m["__ct_gfidx"]
                     seen_fids.add(fi)
-                    sf = fid2file[fi]
-                    if counted.get(fi):
-                        stats.input_rows[sf] = (
-                            stats.input_rows.get(sf, 0) + m[f"__g{seq}_rows"]
-                        )
-                        if m[f"__g{seq}_datebad"]:
-                            stats.date_reject_rows[sf] = (
-                                stats.date_reject_rows.get(sf, 0)
-                                + m[f"__g{seq}_datebad"]
-                            )
-                    for i, fname in enumerate(blank_keys):
-                        n = m[f"__g{seq}_blank_{i}"]
-                        if n:
-                            key = (sf, target, fname)
-                            stats.invalid_source[key] = (
-                                stats.invalid_source.get(key, 0) + n
-                            )
-                    for i, fname in enumerate(datebad_keys):
-                        n = m[f"__g{seq}_datebad_{i}"]
-                        if n:
-                            key = (sf, target, fname)
-                            stats.invalid_date[key] = (
-                                stats.invalid_date.get(key, 0) + n
-                            )
+                    _add_file_metrics(
+                        stats, prefix, fid2file[fi], target, counted[fi],
+                        blank_keys, datebad_keys, m,
+                    )
                 # zero-row files produce no groupBy row but the per-file
                 # path still records 0 input rows for them
                 for fi, cf in counted.items():
                     if cf and fi not in seen_fids:
-                        sf = fid2file[fi]
-                        stats.input_rows.setdefault(sf, stats.input_rows.get(sf, 0))
+                        stats.input_rows.setdefault(fid2file[fi], 0)
 
             with self._compile_lock:
                 self._pending_group_aggs.append((u, aggs, resolve_rows))
 
-        # ---- date row-filter + in-place normalised main column -----------
-        u_cols = u.columns
-        u = u.filter(norm_ok).select(
-            *[
-                F.col("__ct_norm").alias(c) if c == mc else F.col(c)
-                for c in u_cols
-            ]
-        )
+        u = _date_valid_rows(u, date_field)
 
         # ---- the shared record template (built and analyzed ONCE) --------
         from types import SimpleNamespace
@@ -1534,25 +1236,17 @@ class CarrotPlanner:
             raw_date_field=raw_date_field,
             wild_cols=wild_cols,
         )
-        exploded = u.select("*", F.explode_outer(records).alias("__ct_rec")).filter(
-            F.col("__ct_rec").isNotNull()
-        )
-        if comp_dests:
-            exploded = exploded.filter(_strict_for(raw_date_field))
-
         file_map = ", ".join(
             f"{int(fi)}, {_sql_str(sf)}" for sf, _t, _d, fi in items
         )
-        cols = [F.col(f"__ct_rec.{c}").alias(c) for c in schema.columns]
-        meta = [
-            F.expr(f"element_at(map({file_map}), __ct_gfidx)").alias(SRC_COL),
-            F.col(f"__ct_rec.{FIELD_COL}").alias(FIELD_COL),
-            F.col(f"__ct_rec.{FIELDIDX_COL}").alias(FIELDIDX_COL),
-            F.col(f"__ct_rec.{COMBO_COL}").alias(COMBO_COL),
-            F.col(LINE_COL),
-            F.col("__ct_gfidx").alias(FILEIDX_COL),
-        ]
-        return exploded.select(*cols, *meta)
+        return _records_frame(
+            u,
+            records,
+            _strict_for(u, date_field, raw_date_field) if comp_dests else None,
+            schema,
+            F.expr(f"element_at(map({file_map}), __ct_gfidx)"),
+            F.col("__ct_gfidx"),
+        )
 
     # -- SQL-text record builder ----------------------------------------
     #
@@ -1615,7 +1309,7 @@ class CarrotPlanner:
         for c in schema.columns:
             ov = overrides.get(c)
             if ov is None:
-                val = "'0'" if c in schema.notnull_numeric_fields else "''"
+                val = _default_sql(schema, c)
             elif wrap_overrides:
                 val = f"COALESCE(CAST(({ov}) AS STRING), '')"
             else:
@@ -1703,10 +1397,13 @@ class CarrotPlanner:
         """Clamped-zip combination records (X1,
         concept_helpers.generate_combinations): record k takes element
         min(k, len-1) of every matched dest -> concept-id array in ``arrs``
-        (NULL = unmatched), then ``over`` — the row's other writes, which
-        win dest collisions. The record count is the largest matched array
-        size, else ``fallback_n``; ``max_n`` bounds it. Returns the record
-        array and a typed empty array of the same shape."""
+        (NULL = unmatched: the column default), then ``over`` — the row's
+        other writes, which win dest collisions and, like every override,
+        write '' for NULL (a blank person id must stay blank and be
+        rejected at the person lookup, never become person "0"). The record
+        count is the largest matched array size, else ``fallback_n``;
+        ``max_n`` bounds it. Returns the record array and a typed empty
+        array of the same shape."""
         sizes = [f"COALESCE(size({a}), 0)" for a in arrs.values()]
         if len(sizes) > 1:
             n_rec = f"greatest({', '.join(sizes)}, 0)"
@@ -1718,19 +1415,16 @@ class CarrotPlanner:
         for k in range(max_n):
             concept_over = {
                 d: (
-                    f"CASE WHEN {a} IS NOT NULL THEN "
-                    f"element_at({a}, least({k + 1}, size({a}))) END"
+                    f"COALESCE(CASE WHEN {a} IS NOT NULL THEN "
+                    f"element_at({a}, least({k + 1}, size({a}))) END, "
+                    f"{_default_sql(schema, d)})"
                 )
                 for d, a in arrs.items()
                 if d in schema.columns
             }
-            merged = {
-                d: "COALESCE({}, {})".format(
-                    v, "'0'" if d in schema.notnull_numeric_fields else "''"
-                )
-                for d, v in {**concept_over, **over}.items()
-            }
-            recs.append(self._record_struct_sql(schema, merged, fname, k, fidx))
+            recs.append(
+                self._record_struct_sql(schema, {**concept_over, **over}, fname, k, fidx)
+            )
         empty = self._empty_arr_sql(recs[0])
         return (
             f"CASE WHEN ({n_rec}) > 0 THEN slice(array({', '.join(recs)}), 1, {n_rec}) "
@@ -1758,21 +1452,14 @@ class CarrotPlanner:
         comes from a per-file data COLUMN instead of an inlined literal
         (exact-beats-wild stays a COALESCE either way)."""
         wild = cm.value_mappings.get("*")
-        if wild_matched is not None:
-            eff = f"COALESCE({matched}, {wild_matched})"
-        elif wild:
-            pairs = [f"{_sql_str(d)}, {_sql_str_array(ids)}" for d, ids in wild.items() if ids]
-            eff = f"COALESCE({matched}, map({', '.join(pairs)}))" if pairs else matched
-        else:
-            eff = matched
+        if wild_matched is None and wild:
+            wild_matched = _dest_map_sql(wild)
+        eff = f"COALESCE({matched}, {wild_matched})" if wild_matched else matched
         all_dests: list[str] = []
-        max_n = 1
         for m in cm.value_mappings.values():
             for d, ids in m.items():
                 if ids and d not in all_dests:
                     all_dests.append(d)
-                if ids:
-                    max_n = max(max_n, len(ids))
         # precedence (low->high): concept, literals, original value, plain
         # copies, person id + dates
         over = {
@@ -1785,7 +1472,7 @@ class CarrotPlanner:
             schema,
             {d: f"element_at({eff}, {_sql_str(d)})" for d in all_dests},
             over,
-            max_n,
+            _max_combos(cm),
             fname,
             fidx,
         )
@@ -1816,12 +1503,7 @@ class CarrotPlanner:
         wildcard, matching the when-chain semantics)."""
         attached: dict[str, str] = {}
         for i, (fname, cm) in enumerate(tm.concept_mappings.items()):
-            exact = {
-                v: {d: [str(x) for x in ids] for d, ids in m.items() if ids}
-                for v, m in cm.value_mappings.items()
-                if v != "*"
-            }
-            exact = {v: m for v, m in exact.items() if m}
+            exact = _exact_rules(cm)
             if len(exact) < self.LARGE_TERM_MAP_THRESHOLD:
                 continue
             cell = _try_resolve(df, cm.source_field)
@@ -1957,61 +1639,28 @@ class CarrotPlanner:
                                 set(comps_cm),
                             )
                         )
-            if attached and key_name in attached:
-                per_field.append(
-                    self._joined_field_records_sql(
-                        cm,
-                        schema,
-                        common_cm,
-                        cell,
-                        fname,
-                        fidx,
-                        attached[key_name],
-                        lit_over=lit_over,
-                        copy_over=copy_over,
-                        wild_matched=(
-                            wild_cols.get(key_name) if wild_cols else None
-                        ),
-                    )
-                )
-                continue
             wild = cm.value_mappings.get("*")
-            exact = {
-                v: m
-                for v, m in cm.value_mappings.items()
-                if v != "*" and any(ids for ids in m.values())
-            }
-            has_wild = bool(wild) and any(ids for ids in wild.values())
-            if not exact and not has_wild:
-                continue
+            exact = _exact_rules(cm)
             maplit_floor = (
                 1 if getattr(self, "_wide_target", False) else self.MAPLIT_TERM_MAP_THRESHOLD
             )
-            if exact and len(exact) >= maplit_floor:
-                pairs = []
-                for v, m in exact.items():
-                    dest_pairs = [
-                        f"{_sql_str(d)}, {_sql_str_array(ids)}" for d, ids in m.items() if ids
-                    ]
-                    pairs.append(f"{_sql_str(v)}, map({', '.join(dest_pairs)})")
-                matched = (
-                    f"element_at(map({', '.join(pairs)}), {cell})"
-                    if pairs
-                    else "CAST(NULL AS MAP<STRING, ARRAY<STRING>>)"
-                )
+            matched = wild_matched = None
+            if attached and key_name in attached:
+                matched = attached[key_name]
+                wild_matched = wild_cols.get(key_name) if wild_cols else None
+            elif exact and len(exact) >= maplit_floor:
+                pairs = [f"{_sql_str(v)}, {_dest_map_sql(m)}" for v, m in exact.items()]
+                matched = f"element_at(map({', '.join(pairs)}), {cell})"
+            if matched is not None:
                 per_field.append(
                     self._joined_field_records_sql(
-                        cm,
-                        schema,
-                        common_cm,
-                        cell,
-                        fname,
-                        fidx,
-                        matched,
-                        lit_over=lit_over,
-                        copy_over=copy_over,
+                        cm, schema, common_cm, cell, fname, fidx, matched,
+                        lit_over=lit_over, copy_over=copy_over, wild_matched=wild_matched,
                     )
                 )
+                continue
+            has_wild = bool(wild) and any(ids for ids in wild.values())
+            if not exact and not has_wild:
                 continue
 
             def combos_for(dest_map: dict[str, list[int]]) -> str | None:
@@ -2044,11 +1693,7 @@ class CarrotPlanner:
             empty = self._empty_arr_sql(
                 self._record_struct_sql(schema, common_cm, fname, 0, fidx)
             )
-            if not branches:
-                sel = wild_arr
-            else:
-                tail = wild_arr if wild_arr is not None else empty
-                sel = f"CASE {' '.join(branches)} ELSE {tail} END"
+            sel = _case_sql(branches, wild_arr if wild_arr is not None else empty)
             # F1: blank cells never produce records (+ never match wildcard)
             per_field.append(
                 f"CASE WHEN trim({cell}) != '' THEN {sel} ELSE {empty} END"
@@ -2074,15 +1719,8 @@ class CarrotPlanner:
             if cname is not None:
                 fields.append((_sql_ident(cname), cm))
         # per dest column: coalesce(last field's match, ..., first field's)
-        all_dests: list[str] = []
-        for cm in tm.concept_mappings.values():
-            for dm in cm.value_mappings.values():
-                for d in dm:
-                    if d not in all_dests:
-                        all_dests.append(d)
         dest_arrays: dict[str, str] = {}
-        max_n = 1
-        for d in all_dests:
+        for d in _dest_order(tm.concept_mappings.values()):
             picks: list[str] = []
             for cell, cm in reversed(fields):
                 branches = []
@@ -2092,20 +1730,12 @@ class CarrotPlanner:
                     ids = dmap.get(d)
                     arr = _sql_str_array(ids) if ids else "CAST(NULL AS ARRAY<STRING>)"
                     branches.append(f"WHEN {cell} = {_sql_str(value)} THEN {arr}")
-                    if ids:
-                        max_n = max(max_n, len(ids))
                 wild = cm.value_mappings.get("*")
-                wild_arr = None
-                if wild and wild.get(d):
-                    wild_arr = _sql_str_array(wild[d])
-                    max_n = max(max_n, len(wild[d]))
-                if not branches and wild_arr is None:
+                sel = _case_sql(
+                    branches, _sql_str_array(wild[d]) if wild and wild.get(d) else None
+                )
+                if sel is None:
                     continue
-                if not branches:
-                    sel = wild_arr
-                else:
-                    tail = f" ELSE {wild_arr}" if wild_arr is not None else ""
-                    sel = f"CASE {' '.join(branches)}{tail} END"
                 picks.append(f"CASE WHEN trim({cell}) != '' THEN {sel} END")
             if picks:
                 dest_arrays[d] = (
@@ -2127,11 +1757,16 @@ class CarrotPlanner:
         # n combos = max size over matched dest arrays (clamp semantics);
         # 1 when only original values matched
         any_orig = " OR ".join(f"({v}) IS NOT NULL" for v in orig_values.values())
+        # an unmatched original value is no write: the column keeps its
+        # default
+        orig_writes = {
+            d: f"COALESCE({v}, {_default_sql(schema, d)})" for d, v in orig_values.items()
+        }
         records, _ = self._clamped_zip_sql(
             schema,
             dest_arrays,
-            {**orig_values, **common},
-            max_n,
+            {**orig_writes, **common},
+            max((_max_combos(cm) for _cell, cm in fields), default=1),
             next(iter(tm.concept_mappings), ""),
             0,
             fallback_n=f"CASE WHEN {any_orig} THEN 1 ELSE 0 END" if any_orig else None,
@@ -2246,29 +1881,20 @@ class CarrotPlanner:
             cell = f"COALESCE({_sql_ident(cname)}, '')"
             exact = [v for v in cm.value_mappings if v != "*"]
             wild = cm.value_mappings.get("*")
-            dests: list[str] = []
-            for dmap in cm.value_mappings.values():
-                for d in dmap:
-                    if d not in dests:
-                        dests.append(d)
-            for d in dests:
+            for d in _dest_order([cm]):
                 branches = []
                 for value in exact:
                     ids = cm.value_mappings[value].get(d)
                     val = _sql_str(str(ids[-1])) if ids else "CAST(NULL AS STRING)"
                     branches.append(f"WHEN {cell} = {_sql_str(value)} THEN {val}")
                 wild_val = _sql_str(str(wild[d][-1])) if wild and wild.get(d) else None
-                if not branches and wild_val is None:
-                    continue
                 # NO validity gate: person dict matching is bare equality
                 # ('if str(input_value) in outfield_list', core.py:80) — a
                 # dict keyed on the EMPTY string matches blank cells; only
                 # the FIRST datacol carries a valid-value requirement
-                if not branches:
-                    write(d, wild_val)
-                else:
-                    tail = f" ELSE {wild_val}" if wild_val is not None else ""
-                    write(d, f"CASE {' '.join(branches)}{tail} END")
+                sel = _case_sql(branches, wild_val)
+                if sel is not None:
+                    write(d, sel)
             # value-gated plain copies: a plain dest of a dict-mapped field
             # rides exactly ONE value's entry list in the reference's person
             # data (the stale-inputvalue attach — see ir.ConceptMapping), so
@@ -2303,12 +1929,7 @@ class CarrotPlanner:
                     if d in schema.columns:
                         write(d, cell if matched is None else f"CASE WHEN {matched} THEN {cell} END")
 
-        merged = {
-            d: "COALESCE({}, {})".format(
-                v, "'0'" if d in schema.notnull_numeric_fields else "''"
-            )
-            for d, v in overrides.items()
-        }
+        merged = {d: f"COALESCE({v}, {_default_sql(schema, d)})" for d, v in overrides.items()}
         merged.update(common)
         # combo_idx orders the dict-bucket record before the scalar-bucket
         # record within a row (dense-id sort key [file, line, fieldidx,
@@ -2324,15 +1945,16 @@ def _records_per_row_bound(tm: TableMapping) -> int:
     mapping: each mapped field fans out at most max(len(concept-id list))
     combination records (clamped-zip semantics; person targets emit one
     merged combination set, which this also bounds)."""
-    total = 0
-    for cm in tm.concept_mappings.values():
-        max_combo = 1
-        for dmap in cm.value_mappings.values():
-            for ids in dmap.values():
-                if ids:
-                    max_combo = max(max_combo, len(ids))
-        total += max_combo
-    return max(total, 1)
+    return max(sum(_max_combos(cm) for cm in tm.concept_mappings.values()), 1)
+
+
+def _max_combos(cm) -> int:
+    """A field's clamped-zip record count bound: its longest concept-id
+    list, at least 1."""
+    return max(
+        [len(ids) for dmap in cm.value_mappings.values() for ids in dmap.values() if ids],
+        default=1,
+    )
 
 
 def _v1_chosen_buckets(tm: TableMapping):
@@ -2349,6 +1971,237 @@ def _v1_chosen_buckets(tm: TableMapping):
     return [b for b in buckets if b.key_field is None] + [
         b for b in buckets if b.key_field == first
     ]
+
+
+def _thread_map(fn: Callable, items: list, min_items: int) -> list:
+    """``fn`` over ``items``, across a thread pool once there are at least
+    ``min_items`` (see target_candidates). Pool width 8, not 16: the
+    py4j/analyzer pipeline saturates around 8 threads and oversubscription
+    costs ~35% (measured 50-block compile: 16 threads 14.5-15.1 s,
+    8 threads 10.7-11.4 s, 4 threads 12.7 s, 1 thread 27.2 s — on a busy
+    box, scripts/profile_wide_plan.py)."""
+    if len(items) < min_items:
+        return [fn(i) for i in items]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(min(8, len(items))) as ex:
+        return list(ex.map(fn, items))
+
+
+def _union_tree(parts: list[DataFrame]) -> DataFrame:
+    """Balanced-tree positional union, levels threaded: a left-deep chain
+    re-resolves the growing left plan on every step (quadratic analysis —
+    ~30 s of the old 50-block compile); the tree analyzes each part
+    O(log n) times, and sibling unions at one level are independent so they
+    analyze concurrently (~9.5 s -> ~2.8 s at 50 blocks)."""
+
+    def union_pair(pair: tuple[DataFrame, DataFrame]) -> DataFrame:
+        merged = pair[0].union(pair[1])
+        merged.schema
+        return merged
+
+    while len(parts) > 1:
+        pairs = [(parts[i], parts[i + 1]) for i in range(0, len(parts) - 1, 2)]
+        tail = [parts[-1]] if len(parts) % 2 else []
+        parts = _thread_map(union_pair, pairs, 2) + tail
+    return parts[0]
+
+
+def _exact_rules(cm) -> dict[str, dict[str, list[str]]]:
+    """value -> {dest: concept ids as strings} over a field's exact-valued
+    mappings; dests and values without ids are dropped (a value with none
+    falls through to the wildcard)."""
+    exact = {
+        v: {d: [str(x) for x in ids] for d, ids in m.items() if ids}
+        for v, m in cm.value_mappings.items()
+        if v != "*"
+    }
+    return {v: m for v, m in exact.items() if m}
+
+
+def _raw_date_source(tm: TableMapping, main_dt: str | None) -> str | None:
+    """The target's own date source; None when it IS the file's main
+    datetime column, in which case the normalised __ct_* columns apply."""
+    if tm.date_mapping and tm.date_mapping.source_field != main_dt:
+        return tm.date_mapping.source_field
+    return None
+
+
+def _cm_source_columns(cm, date_writes: bool = True) -> Iterator[str]:
+    """The source columns one ConceptMapping reads, in walk order: its
+    field, then the v1 block companions — raw-cell copies and non-trigger
+    term fields, data columns whose blanks the reference counts — then,
+    with ``date_writes``, the per-block date-write sources."""
+    yield cm.source_field
+    for _d, fld in getattr(cm, "copy_fields", ()):
+        yield fld
+    yield from getattr(cm, "companion_term_fields", ())
+    if date_writes:
+        for src, _d in getattr(cm, "date_writes", ()):
+            yield src
+
+
+def _mapping_source_columns(tm: TableMapping) -> Iterator[str]:
+    """The source columns one (file, target) mapping reads, in walk order:
+    every field's columns (_cm_source_columns), the person id, the date
+    source."""
+    for cm in tm.concept_mappings.values():
+        yield from _cm_source_columns(cm)
+    if tm.person_id_mapping:
+        yield tm.person_id_mapping.source_field
+    if tm.date_mapping:
+        yield tm.date_mapping.source_field
+
+
+def _data_columns(tm: TableMapping) -> list[str]:
+    """Unique DATA COLUMNS of a block in first-appearance order: the
+    reference iterates every field present in a block's data and counts
+    its blanks, even a companion no record is keyed on."""
+    return list(
+        dict.fromkeys(
+            name
+            for cm in tm.concept_mappings.values()
+            for name in _cm_source_columns(cm, date_writes=False)
+        )
+    )
+
+
+def _strict_for(frame: DataFrame, date_field: str | None, source_f: str | None) -> Column:
+    """Strict component-date check on a target's date value: the MAIN
+    column (``date_field``) was normalised in place into __ct_norm; any
+    other source is checked on its RAW cell split at the first space
+    (record_builder.py:96-99 get_datetime_value on source_date.split(" ")[0]);
+    a source missing from ``frame``'s header writes no dates and can never
+    strict-reject (record_builder.py:74-79 returns True)."""
+    if source_f is None or source_f == date_field:
+        return strict_date_ok(F.substring(F.col("__ct_norm"), 1, 10))
+    c = _try_resolve(frame, source_f)
+    if c is None:
+        return F.lit(True)
+    return strict_date_ok(F.substring_index(c, " ", 1))
+
+
+def _metric_aggs(
+    frame: DataFrame,
+    prefix: str,
+    norm_ok: Column,
+    blank_fields: list[str],
+    date_gates: dict[str, tuple[Callable[[Column], Column], list[Column]]],
+) -> tuple[list[Column], tuple[str, ...], tuple[str, ...]]:
+    """Aggregations for one (file, target) counter set over the normalised
+    scan, aliased under ``prefix`` (read back by _add_file_metrics): rows,
+    date-rejected rows, blank cells per data column and strict-date
+    failures per concept field. Blank and date failures are counted over
+    date-valid rows (the reference counts inside the per-record loop,
+    after the row filter). ``date_gates``: field -> (concept-match gate on
+    its cell, strict checks; each failing check counts once). Fields
+    missing from the header are skipped; returns the aggregations and the
+    blank and date-failure keys in alias order."""
+    aggs = [
+        F.count(F.lit(1)).alias(f"{prefix}_rows"),
+        F.sum(F.when(~norm_ok, 1).otherwise(0)).alias(f"{prefix}_datebad"),
+    ]
+    blank_keys: list[str] = []
+    for fname in blank_fields:
+        cell = _try_resolve(frame, fname)
+        if cell is None:
+            continue
+        blank_keys.append(fname)
+        aggs.append(
+            F.sum(
+                F.when(norm_ok & ~F.coalesce(valid_value(cell), F.lit(False)), 1).otherwise(0)
+            ).alias(f"{prefix}_blank_{len(blank_keys) - 1}")
+        )
+    datebad_keys: list[str] = []
+    for fname, (match, stricts) in date_gates.items():
+        cell = _try_resolve(frame, fname)
+        if cell is None:
+            continue
+        base_gate = F.coalesce(valid_value(cell), F.lit(False)) & match(cell)
+        expr = None
+        for sc in stricts:
+            piece = F.when(norm_ok & ~sc & base_gate, 1).otherwise(0)
+            expr = piece if expr is None else expr + piece
+        datebad_keys.append(fname)
+        aggs.append(F.sum(expr).alias(f"{prefix}_datebad_{len(datebad_keys) - 1}"))
+    return aggs, tuple(blank_keys), tuple(datebad_keys)
+
+
+def _add_file_metrics(
+    stats: RejectStats,
+    prefix: str,
+    src_file: str,
+    target: str,
+    count_file: bool,
+    blank_keys: tuple[str, ...],
+    datebad_keys: tuple[str, ...],
+    m,
+) -> None:
+    """Fold one collected row of _metric_aggs counters into ``stats``;
+    ``count_file`` says whether this pair owns the file's row counts."""
+    if count_file:
+        stats.input_rows[src_file] = stats.input_rows.get(src_file, 0) + m[f"{prefix}_rows"]
+        if m[f"{prefix}_datebad"]:
+            stats.date_reject_rows[src_file] = (
+                stats.date_reject_rows.get(src_file, 0) + m[f"{prefix}_datebad"]
+            )
+    for counts, keys, kind in (
+        (stats.invalid_source, blank_keys, "blank"),
+        (stats.invalid_date, datebad_keys, "datebad"),
+    ):
+        for i, fname in enumerate(keys):
+            n = m[f"{prefix}_{kind}_{i}"]
+            if n:
+                key = (src_file, target, fname)
+                counts[key] = counts.get(key, 0) + n
+
+
+def _date_valid_rows(frame: DataFrame, date_field: str | None) -> DataFrame:
+    """The date-valid rows of a normalised scan, with the MAIN datetime
+    column overwritten by its normalised value: the reference normalises
+    it in place, so every later read of that column — plain copies,
+    original values, term matching — sees the normalised value."""
+    if date_field is None:
+        return frame
+    frame = frame.filter(F.col("__ct_norm").isNotNull())
+    mc = _try_resolve_name(frame, date_field)
+    return frame.withColumn(mc, F.col("__ct_norm")) if mc is not None else frame
+
+
+def _records_frame(
+    frame: DataFrame,
+    records: Column,
+    gate: Column | None,
+    schema: TableSchema,
+    src: Column,
+    fileidx: Column,
+    keep_bucket: bool = False,
+) -> DataFrame:
+    """One output row per record of ``records`` passing ``gate``: the OMOP
+    columns, then the meta columns every part of a target ends in (the
+    caller's positional union and the dense-id ordering rely on it)."""
+    # explode_outer + null-filter, NOT explode: plain explode's implicit
+    # size()>0 predicate gets pushed below upstream exchanges and
+    # re-evaluates the entire record-generation expression per row
+    exploded = frame.select("*", F.explode_outer(records).alias("__ct_rec")).filter(
+        F.col("__ct_rec").isNotNull()
+    )
+    if gate is not None:
+        exploded = exploded.filter(gate)
+    cols = [F.col(f"__ct_rec.{c}").alias(c) for c in schema.columns]
+    meta = [
+        src.alias(SRC_COL),
+        F.col(f"__ct_rec.{FIELD_COL}").alias(FIELD_COL),
+        F.col(f"__ct_rec.{FIELDIDX_COL}").alias(FIELDIDX_COL),
+        F.col(f"__ct_rec.{COMBO_COL}").alias(COMBO_COL),
+        F.col(LINE_COL),
+        # folded into this select — a trailing withColumn would re-analyze
+        # the whole record projection once more per file
+        fileidx.alias(FILEIDX_COL),
+    ]
+    if keep_bucket:
+        meta.append(F.col(BUCKET_COL))  # dense-id bucket rider
+    return exploded.select(*cols, *meta)
 
 
 def _resolve(df: DataFrame, name: str) -> Column:
@@ -2406,6 +2259,36 @@ def _pruned_columns_guard(dropped: frozenset[str] | None):
         _PRUNE_GUARD.dropped = prev
 
 
+def _dest_order(cms) -> list[str]:
+    """Every dest the mappings' value maps name, in first-appearance
+    order."""
+    return list(
+        dict.fromkeys(d for cm in cms for dmap in cm.value_mappings.values() for d in dmap)
+    )
+
+
+def _dest_map_sql(dest_map: dict) -> str | None:
+    """map<dest, array<concept id>> literal of the dests with ids; None
+    when none has any."""
+    pairs = [f"{_sql_str(d)}, {_sql_str_array(ids)}" for d, ids in dest_map.items() if ids]
+    return f"map({', '.join(pairs)})" if pairs else None
+
+
+def _case_sql(branches: list[str], tail: str | None) -> str | None:
+    """CASE over the WHEN ``branches`` with ``tail`` as its ELSE (none when
+    None); just ``tail`` without branches."""
+    if not branches:
+        return tail
+    els = f" ELSE {tail}" if tail is not None else ""
+    return f"CASE {' '.join(branches)}{els} END"
+
+
+def _default_sql(schema: TableSchema, col: str) -> str:
+    """SQL literal of an OMOP column's unwritten value: '0' for not-null
+    numerics (P3, omopcdm.py:113-118, record_builder.py:28-37), else ''."""
+    return "'0'" if col in schema.notnull_numeric_fields else "''"
+
+
 def _sql_str(s: str) -> str:
     """Spark SQL string literal (backslash IS an escape char by default)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -2421,16 +2304,19 @@ def _sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _concept_match(cell: Column, cm) -> Column:
-    """True when the cell would match this field's concept rules (exact
-    value, else wildcard) — the gate under which a record build proceeds."""
-    if "*" in cm.value_mappings:
-        return F.lit(True)
-    conds = [cell == F.lit(v) for v in cm.value_mappings if v != "*"]
-    if not conds:
-        return F.lit(False)
-    out = conds[0]
-    for c in conds[1:]:
-        out = out | c
+def _concept_match(cell: Column, cms: list) -> Column:
+    """True when the cell would match any of these ConceptMappings' concept
+    rules (exact value, else wildcard) — the gate under which a record
+    build proceeds."""
+    out = None
+    for cm in cms:
+        if "*" in cm.value_mappings:
+            one = F.lit(True)
+        else:
+            conds = [cell == F.lit(v) for v in cm.value_mappings if v != "*"]
+            one = conds[0] if conds else F.lit(False)
+            for c in conds[1:]:
+                one = one | c
+        out = one if out is None else out | one
     return out
 

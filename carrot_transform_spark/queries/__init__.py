@@ -17,7 +17,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from carrot_transform_spark.session import broadcast_threshold
+from carrot_transform_spark.session import broadcast_threshold, plan_size_bytes
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 
@@ -237,19 +237,15 @@ def maybe_broadcast(df: DataFrame, size_like: DataFrame | None = None) -> DataFr
     threshold = broadcast_threshold(df.sparkSession)
     if threshold < 0:
         return df
-    try:
-        stats_df = size_like if size_like is not None else df
-        size = int(
-            stats_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
+    size = plan_size_bytes(size_like if size_like is not None else df)
+    if size is None:
         # Private-API breakage must be LOUD, not a silent force-broadcast
         # that resurrects the sf100 q5 regression.
         import logging
 
         logging.getLogger(__name__).warning(
             "maybe_broadcast: plan-size stats unavailable; hinting broadcast "
-            "without a size check", exc_info=True,
+            "without a size check"
         )
         return F.broadcast(df)
     if size <= threshold:

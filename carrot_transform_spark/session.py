@@ -9,9 +9,10 @@ relative to fact tables, and Arrow enabled for the pandas-UDF paths.
 
 from __future__ import annotations
 
+import logging
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
@@ -94,6 +95,18 @@ def broadcast_threshold(spark: SparkSession) -> int:
         return int(raw) * mult
     except ValueError:
         return 10 << 20
+
+
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate in bytes for ``df``: the root of its
+    optimized plan, through the private ``_jdf.queryExecution()`` API.
+    None when the probe fails (traceback logged at DEBUG); callers choose
+    their own fallback and warn about it."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        logging.getLogger(__name__).debug("plan-size stats probe failed", exc_info=True)
+        return None
 
 
 def get_spark(

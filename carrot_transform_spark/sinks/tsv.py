@@ -41,8 +41,10 @@ def _plan_input_bytes(df: DataFrame) -> int | None:
 
     Leaves (file scans, local relations) carry real sizes; intermediate
     nodes are avoided because Catalyst's join estimates multiply child sizes
-    and would spuriously trip the cap on small inputs. Returns None when the
-    internals are unavailable (the guard then stays out of the way).
+    and would spuriously trip the cap on small inputs — which is why this
+    is not ``session.plan_size_bytes``, the ROOT's estimate. Returns None
+    when the internals are unavailable (the guard then stays out of the
+    way).
     """
     try:
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()

@@ -12,9 +12,9 @@ import pytest
 
 from carrot_transform_spark.atpath import DEFAULT_CONFIG, DEFAULT_DDL
 from carrot_transform_spark.omop.ddl import load_schemas
-from carrot_transform_spark.plans.compiler import CarrotPlanner
+from carrot_transform_spark.plans.compiler import CarrotPlanner, RejectStats
 from carrot_transform_spark.rules.loader import parse_rules
-from carrot_transform_spark.sources.registry import LINE_COL, Source
+from carrot_transform_spark.sources.registry import LINE_COL, Source, make_source
 
 N_VALUES = 1000  # >= LARGE_TERM_MAP_THRESHOLD -> join path
 N_ROWS = 3000
@@ -177,3 +177,67 @@ def test_maplit_band_matches_when_chain(spark):
     via_maplit = records(16)       # n_vals=30 -> map-literal path
     via_chain = records(10_000)    # forced onto the when-chain
     assert via_maplit == via_chain and via_maplit
+
+
+@pytest.mark.parametrize("n_vals", [2, 30, 150])  # when-chain, map literal, join
+def test_blank_person_id_is_rejected_in_every_band(spark, tmp_path, n_vals):
+    """An event row with an empty person id writes a blank person id, so
+    the person lookup rejects it (invalid_person) in every term-map band.
+    The not-null numeric default '0' is for unmatched concepts only: a
+    source person "0" must not receive the row's records."""
+    (tmp_path / "people.csv").write_text(
+        "pid,dob,sex\n0,1980-01-01,M\n1,1981-02-03,F\n", encoding="utf-8"
+    )
+    (tmp_path / "ev.csv").write_text(
+        "user,code,when\n,code_1,2020-01-02\n1,code_1,2020-01-02\n0,code_0,2020-01-02\n",
+        encoding="utf-8",
+    )
+    value_map = {f"code_{i}": {"observation_concept_id": [90000 + i]} for i in range(n_vals)}
+    value_map["original_value"] = ["observation_source_value"]
+    omop = load_schemas(DEFAULT_DDL, DEFAULT_CONFIG)
+    rules = parse_rules(
+        {
+            "metadata": {"dataset": "blankpid"},
+            "cdm": {
+                "person": {
+                    "people.csv": {
+                        "person_id_mapping": {"source_field": "pid", "dest_field": "person_id"},
+                        "date_mapping": {"source_field": "dob", "dest_field": ["birth_datetime"]},
+                        "concept_mappings": {
+                            "sex": {
+                                "M": {"gender_concept_id": [8507]},
+                                "F": {"gender_concept_id": [8532]},
+                            }
+                        },
+                    }
+                },
+                "observation": {
+                    "ev.csv": {
+                        "person_id_mapping": {"source_field": "user", "dest_field": "person_id"},
+                        "date_mapping": {
+                            "source_field": "when",
+                            "dest_field": ["observation_datetime"],
+                        },
+                        "concept_mappings": {"code": value_map},
+                    }
+                },
+            },
+        },
+        omop,
+    )
+    source = make_source(spark, str(tmp_path))
+    planner = CarrotPlanner(spark, rules, omop, person_table="people")
+    stats = RejectStats()
+    try:
+        pmap = planner.person_map(source)
+        ids = {r["source_subject"]: r["target_subject"] for r in pmap.collect()}
+        recs = planner.target_records(source, "observation", pmap, stats)
+        got = sorted(
+            (r["person_id"], r["observation_concept_id"])
+            for r in recs.select("person_id", "observation_concept_id").collect()
+        )
+        planner.flush_metrics()
+    finally:
+        planner.release()
+    assert got == sorted([(ids["1"], "90001"), (ids["0"], "90000")])
+    assert stats.invalid_person == {("ev.csv", "observation"): 1}
