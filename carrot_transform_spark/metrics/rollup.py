@@ -10,6 +10,7 @@ O(distinct keys) driver work instead of O(records).
 
 from __future__ import annotations
 
+import threading
 from collections import defaultdict
 from dataclasses import dataclass
 
@@ -42,6 +43,7 @@ class MetricsCollector:
 
     def __post_init__(self):
         self.counts: dict[Key, dict[str, int]] = defaultdict(lambda: defaultdict(int))
+        self._lock = threading.Lock()
 
     def _inc(self, key: Key, count_type: str, n: int) -> None:
         if n:
@@ -68,37 +70,37 @@ class MetricsCollector:
 
     def add_output_records(self, target: str, records: DataFrame, columns: list[str]) -> None:
         """records: final per-target DataFrame with meta columns; `columns`
-        is the target's DDL column order (out_record index lookup)."""
+        is the target's DDL column order (out_record index lookup).
+
+        Targets call this concurrently (pipeline.run_transform): the
+        groupBy + collect runs unlocked, the counter update under the
+        collector's lock. The counters are plain sums, so the order in
+        which targets arrive does not change the summary."""
         if target == "person":
             gender_col, yob_col = columns[1], columns[2]
-            rows = (
-                records.groupBy(SRC_COL, F.col(gender_col).alias("g"), F.col(yob_col).alias("y"))
-                .count()
-                .collect()
-            )
-            for r in rows:
-                src, g, y, n = r[SRC_COL], r["g"] or "", r["y"] or "", r["count"]
-                self._inc((src, "all", "all", "all", ""), "output_count", n)
-                self._inc(("all", "all", target, "all", ""), "output_count", n)
-                self._inc((src, "all", target, "all", ""), "output_count", n)
-                self._inc((src, "all", target, g, ""), "output_count", n)
-                self._inc((src, "all", target, g, y), "output_count", n)
+            keys = [SRC_COL, F.col(gender_col).alias("g"), F.col(yob_col).alias("y")]
         else:
-            concept_col = columns[2]
-            rows = (
-                records.groupBy(SRC_COL, FIELD_COL, F.col(concept_col).alias("c"))
-                .count()
-                .collect()
-            )
-            for r in rows:
-                src, fld, c, n = r[SRC_COL], r[FIELD_COL], r["c"] or "", r["count"]
-                self._inc((src, "all", "all", "all", ""), "output_count", n)
-                self._inc(("all", "all", target, "all", ""), "output_count", n)
-                self._inc((src, "all", target, "all", ""), "output_count", n)
-                self._inc((src, fld, target, c, ""), "output_count", n)
-                self._inc((src, "all", target, c, ""), "output_count", n)
-                self._inc(("all", "all", target, c, ""), "output_count", n)
-                self._inc(("all", "all", "all", c, ""), "output_count", n)
+            keys = [SRC_COL, FIELD_COL, F.col(columns[2]).alias("c")]
+        rows = records.groupBy(*keys).count().collect()
+        with self._lock:
+            if target == "person":
+                for r in rows:
+                    src, g, y, n = r[SRC_COL], r["g"] or "", r["y"] or "", r["count"]
+                    self._inc((src, "all", "all", "all", ""), "output_count", n)
+                    self._inc(("all", "all", target, "all", ""), "output_count", n)
+                    self._inc((src, "all", target, "all", ""), "output_count", n)
+                    self._inc((src, "all", target, g, ""), "output_count", n)
+                    self._inc((src, "all", target, g, y), "output_count", n)
+            else:
+                for r in rows:
+                    src, fld, c, n = r[SRC_COL], r[FIELD_COL], r["c"] or "", r["count"]
+                    self._inc((src, "all", "all", "all", ""), "output_count", n)
+                    self._inc(("all", "all", target, "all", ""), "output_count", n)
+                    self._inc((src, "all", target, "all", ""), "output_count", n)
+                    self._inc((src, fld, target, c, ""), "output_count", n)
+                    self._inc((src, "all", target, c, ""), "output_count", n)
+                    self._inc(("all", "all", target, c, ""), "output_count", n)
+                    self._inc(("all", "all", "all", c, ""), "output_count", n)
 
     # -- emit -------------------------------------------------------------
 

@@ -18,11 +18,14 @@ take a fast path — a plain global-order window over one partition — saving
 the sampling pass and the per-partition bookkeeping; at real scale the
 range path engages automatically.
 
-The sizing persist is not only a sizing step. In ``run_transform`` each
-target's id-numbered frame has three readers: the output metrics, the
-reject flush and the sink. The persisted input is the only
-materialization they share; without it each reader re-runs the record
-fan-out. Routing small inputs through the bucket path instead (no
+In ``run_transform`` each target's id-numbered frame has three readers:
+the output metrics, the reject flush and the sink. When this function
+took its sized small path, ``CarrotPlanner.target_records`` persists the
+person-joined frame built on its result, and that cache is what the three
+readers share: none of them re-runs the single-partition window or the
+person join. The sizing persist stays: the sizing count fills it, and the
+joined cache then reads it instead of running the record fan-out a
+second time. Routing small inputs through the bucket path instead (no
 persist) measured slower end to end: on the perfbench
 ``mapstream_fanout`` workload (local[3] on a 4-vCPU Xeon host) the warm
 ETL pass went from 8.0-8.4 s to 11.6 s, and traced executor time from

@@ -7,7 +7,13 @@ Lifecycle (reference cli/subcommands/run.py:28-341, run_v2.py:16-59):
   3. person phase: person-id map from the person file (strict dob
      validation, dense ids in file order) -> person_ids.tsv
   4. per target table: compile record plan, auto-number, person join,
-     write TSV
+     output counts; then write TSV. The target builds run concurrently:
+     most of a small run's time is driver-side planning and per-job
+     latency, which overlap across targets, and each build ends in the
+     job that materializes its person-joined cache. The sinks then run
+     one after another on the calling thread: a sink streams its table's
+     rows through the driver, and concurrent writes would hold several
+     tables' rows there at once.
   5. metrics rollup -> summary_mapstream.tsv
 """
 
@@ -21,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from carrot_transform_spark.metrics.rollup import SUMMARY_HEADER, MetricsCollector
 from carrot_transform_spark.omop.ddl import OmopSchemas, load_schemas
-from carrot_transform_spark.plans.compiler import CarrotPlanner, RejectStats
+from carrot_transform_spark.plans.compiler import CarrotPlanner, RejectStats, _thread_map
 from carrot_transform_spark.rules.ir import RuleSet
 from carrot_transform_spark.rules.loader import load_rules
 from carrot_transform_spark.atpath import DEFAULT_CONFIG, DEFAULT_DDL
@@ -92,13 +98,14 @@ def run_transform(
 
     person_map = planner.person_map(source).cache()
 
-    tables: dict[str, DataFrame] = {}
-    for target in rules.targets():
-        if not omop.has_table(target):
-            continue
+    targets = [t for t in rules.targets() if omop.has_table(t)]
+
+    def build(target: str) -> DataFrame:
         df = planner.target_records(source, target, person_map, stats)
-        tables[target] = df
         metrics.add_output_records(target, df, omop.table(target).columns)
+        return df
+
+    tables: dict[str, DataFrame] = dict(zip(targets, _thread_map(build, targets, 2)))
 
     # one combined metric job per source file + one for all reject counts
     # (the per-(file,target) aggregations were deferred during planning)

@@ -24,7 +24,9 @@ One plan per OMOP target table:
          window when the bound is small, the bucket path when the source
          carries a line bucket, else a sizing count, then one window when
          small or the range path)
-      -> person-map broadcast join (J2; anti-join rejects counted)
+      -> person-map broadcast join (J2; anti-join rejects counted),
+         persisted when the ids took the sized small path so that records,
+         rejects, metrics and the sink share one materialization
 
 All data-plane values stay strings for byte-parity with the reference's
 TSV output. Reference semantics citations are inline; the reference builds
@@ -338,6 +340,13 @@ class CarrotPlanner:
         join), with meta columns for ordering and metrics. Auto-number ids
         are assigned here — the reference consumes an id even for records
         later rejected by the person lookup (record_builder.py:149-163)."""
+        return self._candidates(source, target, stats)[0]
+
+    def _candidates(
+        self, source: Source, target: str, stats: RejectStats | None
+    ) -> tuple[DataFrame, bool]:
+        """target_candidates, plus whether dense-id assignment took its
+        sized small path, i.e. left the pre-id candidates persisted."""
         schema = self.omop.table(target)
         per_source = self.rules.mappings[target]
         # FILEIDX follows the reference's GLOBAL input-file iteration order
@@ -355,9 +364,12 @@ class CarrotPlanner:
             for tm in per_source.values()
             for cm in tm.concept_mappings.values()
         )
-        self._wide_target = total_pairs >= self.WIDE_PLAN_PAIRS
-        # source reads + spread decisions stay sequential (cheap, and some
-        # Source impls memoize); the expensive per-file plan construction —
+        # decided per call, not stored on the planner: targets build
+        # concurrently (pipeline.run_transform)
+        wide = total_pairs >= self.WIDE_PLAN_PAIRS
+        # source reads + spread decisions stay sequential within a target
+        # (cheap; run_transform builds targets concurrently, so a Source's
+        # read must be thread-safe); the expensive per-file plan construction —
         # the JVM-side parse of each block's record-array SQL plus its
         # analysis — runs across a thread pool: py4j's clientserver gives
         # each Python thread its own JVM connection, so parse/analysis
@@ -383,7 +395,7 @@ class CarrotPlanner:
         # ONE compiled record template over the union of their scans. The
         # rest take the per-block path below.
         grouped_parts: list[DataFrame] = []
-        if self.group_same_shape and self._wide_target and len(inputs) > 2:
+        if self.group_same_shape and wide and len(inputs) > 2:
             sig_groups: dict[object, list[int]] = {}
             for idx, (src_file, tm, df) in enumerate(inputs):
                 sig = self._group_signature(src_file, tm, df)
@@ -438,7 +450,7 @@ class CarrotPlanner:
             with _pruned_columns_guard(dropped):
                 part = self._file_records(
                     df, tm, schema, stats, fileidx=global_files.index(src_file),
-                    keep_bucket=use_bucket,
+                    keep_bucket=use_bucket, wide=wide,
                 )
             part.schema  # force analysis inside the worker thread
             return part
@@ -452,6 +464,7 @@ class CarrotPlanner:
         # positional union is safe: every part ends in the same final
         # select, so column order is identical by construction
         out = _union_tree(parts)
+        sized = out
         auto_col = self.omop.auto_number_col(target)
         if auto_col and auto_col in schema.columns:
             # FIELDIDX (declaration-order ordinal), NOT the field name: the
@@ -470,7 +483,10 @@ class CarrotPlanner:
             out = out.withColumn(auto_col, F.col("__ct_auto").cast("string")).drop("__ct_auto")
         if use_bucket:
             out = out.drop(BUCKET_COL)
-        return out
+        # with_dense_ids persists the very DataFrame it was given, so the
+        # flag is set exactly when the sized small path kept it cached (the
+        # range path unpersists it again; the other paths never persist it)
+        return out, sized.is_cached
 
     def target_records(
         self,
@@ -480,12 +496,20 @@ class CarrotPlanner:
         stats: RejectStats | None = None,
     ) -> DataFrame:
         """Final records: person ids mapped via broadcast join; rejects
-        counted into stats (run.py:275-299 semantics)."""
-        schema = self.omop.table(target)
+        counted into stats (run.py:275-299 semantics).
+
+        When dense ids took their sized small path, the person-joined frame
+        is persisted: the kept records, the reject counts, the output
+        metrics and the sink then all read that one cache, and none of them
+        re-runs the single-partition id window or the person join. The
+        footer-sized, bucket and range id paths get no cache of their own."""
         person_col = self.omop.person_col(target)
-        cand = self.target_candidates(source, target, stats)
+        cand, sized_small = self._candidates(source, target, stats)
         pmap = F.broadcast(person_map.select("source_subject", "target_subject"))
         joined = cand.join(pmap, cand[person_col] == pmap.source_subject, "left")
+        if sized_small:
+            joined = joined.persist()
+            self._persisted.append(joined)
         kept = joined.filter(F.col("target_subject").isNotNull()).withColumn(
             person_col, F.col("target_subject").cast("string")
         ).drop("source_subject", "target_subject")
@@ -642,6 +666,7 @@ class CarrotPlanner:
         stats: RejectStats | None,
         fileidx: int = 0,
         keep_bucket: bool = False,
+        wide: bool = False,
     ) -> DataFrame:
         target = tm.target_table
         src_file = tm.source_table
@@ -826,7 +851,9 @@ class CarrotPlanner:
             # rules-table joins so a field with thousands of mapped values
             # doesn't produce a pathological expression tree
             df, attached = self._attach_large_rules(df, tm)
-            records = self._standard_records_col(df, tm, schema, attached, raw_date_field)
+            records = self._standard_records_col(
+                df, tm, schema, attached, raw_date_field, wide=wide
+            )
 
         # strict-date component failure drops the whole row's records for
         # this target (record_builder.py:92-132); the per-field counts were
@@ -1235,6 +1262,7 @@ class CarrotPlanner:
             attached=attached,
             raw_date_field=raw_date_field,
             wild_cols=wild_cols,
+            wide=True,
         )
         file_map = ", ".join(
             f"{int(fi)}, {_sql_str(sf)}" for sf, _t, _d, fi in items
@@ -1528,6 +1556,7 @@ class CarrotPlanner:
         attached: dict[str, str] | None = None,
         raw_date_field: str | None = None,
         wild_cols: dict[str, str] | None = None,
+        wide: bool = False,
     ) -> Column:
         """array<record> for a standard target: per-field fan-out (U1), each
         field contributing its matched value's clamped-zip combinations (X1).
@@ -1547,8 +1576,9 @@ class CarrotPlanner:
           plans (and generated code) stay |values|x smaller;
         - beyond that: broadcast rules-table join (_attach_large_rules),
           same builder.
-        On WIDE targets (see WIDE_PLAN_PAIRS) every field takes the
-        per-field builder: |values|x less generated code dominates there."""
+        On WIDE targets (``wide``, see WIDE_PLAN_PAIRS) every field takes
+        the per-field builder: |values|x less generated code dominates
+        there."""
         common = self._common_values_sql(df, tm, schema, raw_date_field)
         # v1 blocks each write ONLY their own date dests from their own
         # columns (core.py iterates the block's data entries); the shared
@@ -1641,9 +1671,7 @@ class CarrotPlanner:
                         )
             wild = cm.value_mappings.get("*")
             exact = _exact_rules(cm)
-            maplit_floor = (
-                1 if getattr(self, "_wide_target", False) else self.MAPLIT_TERM_MAP_THRESHOLD
-            )
+            maplit_floor = 1 if wide else self.MAPLIT_TERM_MAP_THRESHOLD
             matched = wild_matched = None
             if attached and key_name in attached:
                 matched = attached[key_name]
@@ -1973,19 +2001,32 @@ def _v1_chosen_buckets(tm: TableMapping):
     ]
 
 
+_POOL_WIDTH = _threading.local()
+
+
 def _thread_map(fn: Callable, items: list, min_items: int) -> list:
     """``fn`` over ``items``, across a thread pool once there are at least
-    ``min_items`` (see target_candidates). Pool width 8, not 16: the
+    ``min_items`` (see target_candidates). Width 8 in all, not 16: the
     py4j/analyzer pipeline saturates around 8 threads and oversubscription
     costs ~35% (measured 50-block compile: 16 threads 14.5-15.1 s,
     8 threads 10.7-11.4 s, 4 threads 12.7 s, 1 thread 27.2 s — on a busy
-    box, scripts/profile_wide_plan.py)."""
-    if len(items) < min_items:
+    box, scripts/profile_wide_plan.py). The 8 are shared with nested
+    calls: run_transform's target pool of k threads leaves each target's
+    per-file and union pools 8 // k threads (inline below 2), so at most
+    about 8 threads build plans at once."""
+    budget = getattr(_POOL_WIDTH, "width", 8)
+    if len(items) < min_items or budget < 2:
         return [fn(i) for i in items]
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(min(8, len(items))) as ex:
-        return list(ex.map(fn, items))
+    width = min(budget, len(items))
+
+    def run(item):
+        _POOL_WIDTH.width = budget // width
+        return fn(item)
+
+    with ThreadPoolExecutor(width) as ex:
+        return list(ex.map(run, items))
 
 
 def _union_tree(parts: list[DataFrame]) -> DataFrame:

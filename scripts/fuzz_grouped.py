@@ -307,7 +307,6 @@ def run_seed(spark, omop, seed: int, gen=gen_case) -> str | None:
             group_same_shape=grouped,
         )
         planner.WIDE_PLAN_PAIRS = 1
-        planner._wide_target = True
         stats = RejectStats()
         cand = planner.target_candidates(src, "observation", stats)
         rows = sorted(tuple(r) for r in cand.select(*sorted(cand.columns)).collect())

@@ -5,14 +5,15 @@ Usage: python scripts/plan_fingerprints.py <rules.json> <inputs dir> <person tab
 Plans each target the rules map the way `pipeline.run_transform` does
 (person map, then `CarrotPlanner.target_records` per target) and prints
 one line per target: ``target sha1 length``. The hash and the length are
-taken over `optimizedPlan().canonicalized().toString()`, which numbers
-expression ids from zero, with every ``plan_id=N`` tag replaced by a fixed
-token: those tags count the plans the process built before, so they differ
-from one process to the next. Two trees that print the same lines for the
-same inputs compile the same plans. Compare runs in separate processes: the
-physical plan of a cached scan inside the text keeps the process's own
-expression ids, so a second build in one process prints other hashes.
-Nothing is written; the only Spark jobs are the ones planning itself runs.
+taken over `optimizedPlan().canonicalized().toString()` with two process
+counters masked: every ``plan_id=N`` tag becomes a fixed token, and every
+expression id ``#N`` is renumbered in order of first appearance.
+Canonicalization numbers the ids of the logical plan from zero, but the
+physical plan of a cached frame inside the text keeps the ids the process
+handed out, which depend on how many plans it built before and, when
+targets build concurrently, on the interleaving. Two trees that print the
+same lines for the same inputs compile the same plans. Nothing is written;
+the only Spark jobs are the ones planning itself runs.
 """
 
 from __future__ import annotations
@@ -33,13 +34,17 @@ from carrot_transform_spark.rules.loader import load_rules  # noqa: E402
 from carrot_transform_spark.sources.registry import make_source  # noqa: E402
 
 _PLAN_ID = re.compile(r"plan_id=\d+")
+_EXPR_ID = re.compile(r"#(\d+)")
 
 
 def plan_fingerprint(df: DataFrame) -> tuple[str, int]:
     """(sha1 hex, character length) of the DataFrame's canonicalized
-    optimized plan, ``plan_id`` tags masked."""
+    optimized plan, ``plan_id`` tags masked and expression ids renumbered
+    by first appearance."""
     text = df._jdf.queryExecution().optimizedPlan().canonicalized().toString()
     text = _PLAN_ID.sub("plan_id=#", text)
+    ids: dict[str, int] = {}
+    text = _EXPR_ID.sub(lambda m: f"#{ids.setdefault(m.group(1), len(ids))}", text)
     return hashlib.sha1(text.encode("utf-8")).hexdigest(), len(text)
 
 

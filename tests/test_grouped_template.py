@@ -119,7 +119,6 @@ def _compile(spark, grouped: bool):
     planner = CarrotPlanner(
         spark, rules, omop, person_table="grp_00.csv", group_same_shape=grouped
     )
-    planner._wide_target = True  # force the wide band at this tiny scale
     # keep the wide decision stable regardless of pair counts
     planner.WIDE_PLAN_PAIRS = 1
     stats = RejectStats()
@@ -322,7 +321,6 @@ def _compile_v1(spark, grouped: bool):
     planner = CarrotPlanner(
         spark, rules, omop, person_table="v1grp_00.csv", group_same_shape=grouped
     )
-    planner._wide_target = True
     planner.WIDE_PLAN_PAIRS = 1
     stats = RejectStats()
     cand = planner.target_candidates(src, "observation", stats)
