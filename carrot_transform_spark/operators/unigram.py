@@ -443,8 +443,9 @@ def em_refine(
 
     Each round is: one lattice DP (|words| x max_piece work; soft runs
     forward + backward), one vocab-sized count aggregate, one vocab-sized
-    re-rank. The rank window is a single-partition sort of the PIECE
-    table only — vocab-scale (Heaps' law), never corpus-scale."""
+    re-rank, one checkpoint of the re-costed piece table. The rank window
+    is a single-partition sort of the PIECE table only — vocab-scale
+    (Heaps' law), never corpus-scale."""
     if em_mode not in ("hard", "soft"):
         raise ValueError(f"em_mode must be 'hard' or 'soft', got {em_mode!r}")
     soft = em_mode == "soft"
@@ -494,13 +495,17 @@ def em_refine(
             if soft
             else F.col("freq") / F.col("tot")
         )
+        # eagerly localCheckpoint-ed like the DP rounds: the next round's
+        # lattice and counts, the final encode and its piece rows all read
+        # the vocab-sized table, and unmaterialized each of them re-ran this
+        # round's whole E-step
         pv = kept.crossJoin(F.broadcast(total)).select(
             "piece",
             "freq",
             F.floor(fround(-F.log(ratio), 9) * _COST_SCALE + F.lit(0.5))
             .cast("long")
             .alias("cost"),
-        )
+        ).localCheckpoint(eager=True)
     return pv
 
 

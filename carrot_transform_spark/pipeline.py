@@ -7,13 +7,10 @@ Lifecycle (reference cli/subcommands/run.py:28-341, run_v2.py:16-59):
   3. person phase: person-id map from the person file (strict dob
      validation, dense ids in file order) -> person_ids.tsv
   4. per target table: compile record plan, auto-number, person join,
-     output counts; then write TSV. The target builds run concurrently:
-     most of a small run's time is driver-side planning and per-job
-     latency, which overlap across targets, and each build ends in the
-     job that materializes its person-joined cache. The sinks then run
-     one after another on the calling thread: a sink streams its table's
-     rows through the driver, and concurrent writes would hold several
-     tables' rows there at once.
+     output counts, then the sink write. The target builds run
+     concurrently: most of a small run's time is driver-side planning
+     and per-job latency, which overlap across targets. No row enters
+     the driver, so concurrent writes hold no table there.
   5. metrics rollup -> summary_mapstream.tsv
 """
 
@@ -96,37 +93,29 @@ def run_transform(
     stats = RejectStats()
     metrics = MetricsCollector(dataset_name=rules.dataset_name, log_threshold=log_threshold)
 
+    # output_dir may be a local folder, an object-store URL, a minio: spec,
+    # or a JDBC/SQLAlchemy database URL (reference outputs.py:324-341)
+    sink = make_sink(spark, output_dir) if write_outputs and output_dir is not None else None
     person_map = planner.person_map(source).cache()
-
     targets = [t for t in rules.targets() if omop.has_table(t)]
 
     def build(target: str) -> DataFrame:
+        columns = omop.table(target).columns
         df = planner.target_records(source, target, person_map, stats)
-        metrics.add_output_records(target, df, omop.table(target).columns)
+        metrics.add_output_records(target, df, columns)
+        if sink is not None:
+            sink.write(target, df, columns)
         return df
 
-    tables: dict[str, DataFrame] = dict(zip(targets, _thread_map(build, targets, 2)))
-
-    # one combined metric job per source file + one for all reject counts
-    # (the per-(file,target) aggregations were deferred during planning)
-    planner.flush_metrics()
-    metrics.add_reject_stats(stats)
-
-    result = RunResult(
-        tables=tables, person_map=person_map, metrics=metrics, stats=stats, planner=planner
-    )
-
-    if write_outputs and output_dir is not None:
-        try:
-            # output_dir may be a local folder, an object-store URL, a
-            # minio: spec, or a JDBC/SQLAlchemy database URL (reference
-            # outputs.py:324-341 dispatch)
-            sink = make_sink(spark, output_dir)
-            for target, df in tables.items():
-                sink.write(target, df, omop.table(target).columns)
-            # streamed through the sink like every other table (toLocalIterator
-            # in single mode / cluster-committed part files in distributed mode)
-            # — never a full-table collect on the driver
+    result = RunResult({}, person_map, metrics, stats, planner)
+    try:
+        result.tables = dict(zip(targets, _thread_map(build, targets, 2)))
+        # one combined metric job per source file + one for all reject counts
+        # (the per-(file,target) aggregations were deferred during planning)
+        planner.flush_metrics()
+        metrics.add_reject_stats(stats)
+        if sink is not None:
+            # written by Spark like every other table: never a collect
             pm = (
                 person_map.orderBy("target_subject" if use_input_person_ids else "__ct_line")
                 .selectExpr(
@@ -139,9 +128,12 @@ def run_transform(
                 "summary_mapstream", SUMMARY_HEADER, metrics.summary_rows(),
                 spark=planner.spark,
             )
-        finally:
-            # outputs are on disk (or the write failed): either way drop every
-            # cache the run accumulated so a long-lived session doesn't leak
-            result.release()
+    except BaseException:
+        result.release()  # a failed run leaves no cache behind
+        raise
+    if sink is not None:
+        # outputs are written: drop every cache the run accumulated so a
+        # long-lived session doesn't leak (unwritten tables stay the caller's)
+        result.release()
 
     return result

@@ -3,18 +3,19 @@
 The reference writes one `<out>/<name>.tsv` per target, tab-joined with no
 quoting (outputs.py:96-114). Two write modes:
 
-- ``single``     : exact single-file TSV via toLocalIterator — byte-
-                   compatible with the reference goldens; streams, so the
-                   driver never holds the full table.
+- ``single``     : one exact TSV, byte-compatible with the reference
+                   goldens. Spark builds and writes every line as text
+                   parts in `<name>.tsv.parts`; the driver then only
+                   concatenates the header and the parts, in partition
+                   (= row) order, into `<name>.tsv`. No row enters Python.
 - ``distributed``: df.write.csv with tab separator — the 100 TB path
                    (many part files, committed by the cluster).
 
 The directory may be a local path OR an object-store URL (s3a://...,
 reference K3 writes multipart to S3/MinIO, outputs.py + sources.py s3
-coordinates). For URLs, distributed mode hands the URL straight to Spark's
-committer (the s3a committer handles multipart), and single mode streams
-the same toLocalIterator iteration through the Hadoop FileSystem API —
-one object, no local staging, never a full-table collect.
+coordinates). Both go through Spark's writer and one Hadoop FileSystem
+merge: the URL scheme's FileSystem, or the raw local one for a path (no
+`.crc` sidecar in the output).
 """
 
 from __future__ import annotations
@@ -22,18 +23,20 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
 
 _URL_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*://")
 
 # "single" mode exists for byte-exact parity with the reference goldens and
-# funnels every row through the driver (toLocalIterator). Refuse it when the
-# plan's input exceeds this cap so it can't be misused as a 100 TB funnel.
+# copies every byte of a table through one driver-side stream. Refuse it
+# when the plan's input exceeds this cap so it can't be misused as a 100 TB
+# funnel.
 SINGLE_MODE_INPUT_CAP = 1 << 30  # 1 GiB of leaf-scan input
 
-# buffer size for object-store streams: one py4j stream.write per ~4 MiB of
-# lines instead of one per row
-_URL_WRITE_CHUNK = 4 << 20
+# the column types whose Spark string cast is the text Python's str() gives;
+# others differ (1.0E20 vs 1e+20, true vs True), so single mode refuses them
+_TEXT_TYPES = (StringType, ByteType, ShortType, IntegerType, LongType)
 
 
 def _plan_input_bytes(df: DataFrame) -> int | None:
@@ -91,14 +94,15 @@ class TsvDirSink:
         self.write_mode = write_mode
         self.single_size_cap = single_size_cap
 
-    def _hadoop_open(self, spark, url: str):
-        """Create (overwrite) `url` via the Hadoop FileSystem for its scheme
-        and return the JVM output stream."""
-        jvm = spark._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(url)
-        fs = jpath.getFileSystem(hconf)
-        return fs.create(jpath, True)
+    def _path(self, spark, name: str):
+        """(Hadoop FileSystem, Path) of `<directory>/<name>`; a local
+        directory gets the raw FileSystem, which writes no `.crc` files."""
+        fs_api, hconf = spark._jvm.org.apache.hadoop.fs, spark._jsc.hadoopConfiguration()
+        if self.is_url:
+            path = fs_api.Path(f"{self.base}/{name}")
+            return path.getFileSystem(hconf), path
+        path = fs_api.Path(f"file://{self.directory.resolve()}/{name}")
+        return fs_api.FileSystem.getLocal(hconf).getRaw(), path
 
     def write(self, name: str, df: DataFrame, columns: list[str]) -> None:
         # "shorten" quirk (reference outputs.py:62-83 start/write): when the
@@ -108,54 +112,56 @@ class TsvDirSink:
             columns = columns[:-1]
             df = df.select(*[df.columns[i] for i in range(len(columns))])
         out = df.select(*columns)
-        if self.mode == "single":
-            if self.single_size_cap is not None:
-                est = _plan_input_bytes(out)
-                if est is not None and est > self.single_size_cap:
-                    raise ValueError(
-                        f"TsvDirSink single mode streams through the driver and is "
-                        f"meant for small byte-parity runs; this plan reads an "
-                        f"estimated {est} bytes (> cap {self.single_size_cap}). "
-                        f"Use mode='distributed' (the committer path), or pass "
-                        f"single_size_cap=None to force."
-                    )
-            if self.is_url:
-                stream = self._hadoop_open(out.sparkSession, f"{self.base}/{name}.tsv")
-                try:
-                    # buffer lines into multi-MiB chunks: one py4j round trip
-                    # per chunk instead of per row
-                    buf: list[bytes] = [("\t".join(columns) + "\n").encode("utf-8")]
-                    buffered = len(buf[0])
-                    for row in out.toLocalIterator():
-                        line = "\t".join("" if v is None else str(v) for v in row) + "\n"
-                        b = line.encode("utf-8")
-                        buf.append(b)
-                        buffered += len(b)
-                        if buffered >= _URL_WRITE_CHUNK:
-                            stream.write(b"".join(buf))
-                            buf, buffered = [], 0
-                    if buf:
-                        stream.write(b"".join(buf))
-                finally:
-                    stream.close()
-                return
-            path = self.directory / f"{name}.tsv"
-            appending = self.write_mode == "append" and path.exists()
-            with path.open("a" if appending else "w", encoding="utf-8") as fh:
-                if not appending:
-                    fh.write("\t".join(columns) + "\n")
-                for row in out.toLocalIterator():
-                    fh.write("\t".join("" if v is None else str(v) for v in row) + "\n")
-        else:
+        if self.mode != "single":
             target = f"{self.base}/{name}" if self.is_url else str(self.directory / name)
-            (
-                out.write.mode("overwrite")
-                .option("sep", "\t")
-                .option("header", True)
-                .option("emptyValue", "")
-                .option("nullValue", "")
-                .csv(target)
+            out.write.mode("overwrite").options(
+                sep="\t", header=True, emptyValue="", nullValue=""
+            ).csv(target)
+            return
+        for field in out.schema.fields:
+            if not isinstance(field.dataType, _TEXT_TYPES):
+                raise TypeError(
+                    f"TsvDirSink single mode writes string and integral columns only; "
+                    f"column {field.name!r} is {field.dataType.simpleString()}"
+                )
+        if self.single_size_cap is not None:
+            est = _plan_input_bytes(out)
+            if est is not None and est > self.single_size_cap:
+                raise ValueError(
+                    f"TsvDirSink single mode merges the whole table through the driver "
+                    f"and is meant for small byte-parity runs; this plan reads an "
+                    f"estimated {est} bytes (> cap {self.single_size_cap}). "
+                    f"Use mode='distributed' (the committer path), or pass "
+                    f"single_size_cap=None to force."
+                )
+        spark, hadoop = out.sparkSession, out.sparkSession._jvm.org.apache.hadoop
+        fs, dest = self._path(spark, f"{name}.tsv")
+        _, parts = self._path(spark, f"{name}.tsv.parts")
+        appending = self.write_mode == "append" and fs.exists(dest)
+        cells = [F.coalesce(F.col(c).cast("string"), F.lit("")) for c in columns]
+        try:
+            out.select(F.concat_ws("\t", *cells)).write.mode("overwrite").option(
+                "compression", "none"
+            ).text(parts.toString())
+            # part-<partition>-<uuid>-c<file>.txt: partition order is row order
+            files = sorted(
+                (st.getPath() for st in fs.listStatus(parts, hadoop.fs.GlobFilter("part-*"))),
+                key=lambda p: (int(p.getName().split("-")[1]), p.getName()),
             )
+            stream = fs.append(dest) if appending else fs.create(dest, True)
+            try:
+                if not appending:
+                    stream.write(("\t".join(columns) + "\n").encode("utf-8"))
+                for path in files:
+                    src = fs.open(path)
+                    try:
+                        hadoop.io.IOUtils.copyBytes(src, stream, 1 << 16, False)
+                    finally:
+                        src.close()
+            finally:
+                stream.close()
+        finally:
+            fs.delete(parts, True)
 
     def write_rows(
         self, name: str, header: list[str], rows: list[list[str]], spark=None
@@ -168,7 +174,8 @@ class TsvDirSink:
         if self.is_url:
             if spark is None:
                 raise ValueError("write_rows to an object-store URL needs the spark session")
-            stream = self._hadoop_open(spark, f"{self.base}/{name}.tsv")
+            fs, dest = self._path(spark, f"{name}.tsv")
+            stream = fs.create(dest, True)
             try:
                 stream.write("".join(lines).encode("utf-8"))
             finally:

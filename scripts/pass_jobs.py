@@ -12,7 +12,8 @@ every pass time, the job total, and the last pass's output digest and
 check problems (`perfbench/checks.py`).
 
 A job's site is the Python line that called the DataFrame action
-(``count``, ``collect`` or ``toLocalIterator``) that submitted it, kept
+(``count``, ``collect`` or ``toLocalIterator``) or the DataFrameWriter
+action (``text`` or ``csv``) that submitted it, kept
 in a job property of its own: PySpark's ``callSite.short`` bookkeeping is
 process-wide and drops the site of a collect that overlaps another
 thread's. Jobs a query starts for its stages and broadcasts carry the
@@ -38,13 +39,17 @@ from perfbench.worker import spark_conf  # noqa: E402
 from perfbench.workloads import PERSON_TABLE  # noqa: E402
 
 SITE = "pass_jobs.site"
-ACTIONS = ("count", "collect", "toLocalIterator")
+# (class module, class name, actions): the calls whose jobs get a site
+ACTIONS = [
+    ("pyspark.sql.classic.dataframe", "DataFrame", ("count", "collect", "toLocalIterator")),
+    ("pyspark.sql.readwriter", "DataFrameWriter", ("text", "csv")),
+]
 
 
 def _tag_sites(sc) -> None:
-    """Record the Python caller of every DataFrame action in the SITE job
-    property of the calling thread's jobs."""
-    from pyspark.sql.classic.dataframe import DataFrame
+    """Record the Python caller of every action in the SITE job property
+    of the calling thread's jobs."""
+    import importlib
 
     def tagged(name: str, orig):
         def action(self, *args, **kwargs):
@@ -61,8 +66,10 @@ def _tag_sites(sc) -> None:
 
         return action
 
-    for name in ACTIONS:
-        setattr(DataFrame, name, tagged(name, getattr(DataFrame, name)))
+    for module, cls_name, names in ACTIONS:
+        cls = getattr(importlib.import_module(module), cls_name)
+        for name in names:
+            setattr(cls, name, tagged(name, getattr(cls, name)))
 
 
 def _jobs(event_log: Path) -> list[tuple[float, str]]:

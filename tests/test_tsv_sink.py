@@ -96,3 +96,73 @@ def test_plan_input_bytes_uses_leaf_stats(spark, tmp_path):
     rdd_df = spark.createDataFrame([(1, "x")], ["k", "v"])
     est2 = _plan_input_bytes(rdd_df)
     assert est2 is not None and est2 < 1 << 62
+
+
+def _row_text(df, columns) -> str:
+    """The TSV text of `df` built row by row in Python: header, then each
+    row's values tab-joined with NULL as ''."""
+    lines = ["\t".join(columns)]
+    lines += ["\t".join("" if v is None else str(v) for v in row) for row in df.collect()]
+    return "\n".join(lines) + "\n"
+
+
+def _mixed_frame(spark):
+    """50 ids in 7 partitions, 3 of them emptied by the filter; a long
+    column and a string column with NULLs, tabs inside values and
+    non-ASCII text."""
+    return spark.range(0, 50, 1, 7).where("id < 10 OR id >= 30").selectExpr(
+        "CASE WHEN id % 5 = 0 THEN NULL ELSE id * 10000000000 END AS l",
+        "CASE WHEN id % 3 = 0 THEN NULL WHEN id % 7 = 0 THEN concat('a\tb', id)"
+        " ELSE concat('é', id) END AS s",
+        "CAST(-id AS INT) AS i",
+    )
+
+
+def test_single_mode_bytes_match_row_text(spark, tmp_path):
+    """Spark-written parts, concatenated in partition order, are the bytes
+    of the table's rows joined in Python, in the frame's row order."""
+    df = _mixed_frame(spark)
+    sizes = df.rdd.glom().map(len).collect()
+    assert len(sizes) >= 5 and 0 in sizes and None in [r.l for r in df.collect()]
+    TsvDirSink(tmp_path).write("t", df, ["l", "s", "i"])
+    assert (tmp_path / "t.tsv").read_bytes() == _row_text(df, ["l", "s", "i"]).encode("utf-8")
+
+
+def test_single_mode_append_writes_header_once(spark, tmp_path):
+    df = _mixed_frame(spark)
+    sink = TsvDirSink(tmp_path, write_mode="append")
+    sink.write("t", df, ["l", "s", "i"])
+    sink.write("t", df, ["l", "s", "i"])
+    text = _row_text(df, ["l", "s", "i"])
+    body = text[text.index("\n") + 1:]
+    assert (tmp_path / "t.tsv").read_text(encoding="utf-8") == text + body
+
+
+def test_single_mode_leaves_only_the_tsv(spark, tmp_path):
+    """No part directory, `.crc` sidecar or `_SUCCESS` marker stays beside
+    the output, and an empty frame writes its header only."""
+    df = _mixed_frame(spark)
+    sink = TsvDirSink(tmp_path)
+    sink.write("t", df, ["l", "s", "i"])
+    sink.write("e", df.where("false"), ["l", "s", "i"])
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["e.tsv", "t.tsv"]
+    assert (tmp_path / "e.tsv").read_text() == "l\ts\ti\n"
+
+
+def test_single_mode_refuses_non_text_types(spark, tmp_path):
+    """Spark's string cast of a double or boolean is not Python's text
+    (1.0E20 vs 1e+20, true vs True): single mode refuses such a column,
+    naming it, before any job runs."""
+    import pytest
+
+    df = spark.range(3).selectExpr("CAST(id AS STRING) AS a", "id * 1e20 AS d")
+    sc = spark.sparkContext
+    sc.setJobGroup("tsv-type-guard", "single-mode type guard")
+    try:
+        with pytest.raises(TypeError, match="'d'"):
+            TsvDirSink(tmp_path).write("t", df, ["a", "d"])
+        assert list(sc.statusTracker().getJobIdsForGroup("tsv-type-guard")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(tmp_path.iterdir()) == []
