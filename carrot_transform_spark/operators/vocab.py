@@ -5,9 +5,9 @@ of any training run.
   word_id = dense rank in (freq desc, word asc) order — deterministic
   across engines. The corpus collapses to per-word counts first (classic
   map-side-combine aggregation), so the ranking input is |vocab|, not
-  |corpus|; id assignment reuses operators/ids.with_dense_ids, which takes
-  the range-partition path for vocabularies above the small threshold —
-  never a single-partition global sort of a big vocab.
+  |corpus|; id assignment reuses operators/ids.with_dense_ids, which numbers
+  vocabularies above the small threshold per (freq, two-character word
+  prefix) bucket — never a single-partition global sort of a big vocab.
 - ``encode_docs``: per-doc token-id arrays via posexplode + a broadcast
   vocab join, re-assembled in token order with a sort-by-position
   aggregation (partition-local; no global ordering). OOV tokens (cut by
@@ -40,8 +40,11 @@ def build_vocab(
         .filter(F.col("freq") >= min_freq)
         .withColumn("neg_freq", -F.col("freq"))
     )
+    # words sharing (freq, first two characters) are contiguous in the order
+    bucket = F.xxhash64("neg_freq", F.substring("word", 1, 2))
     vocab = with_dense_ids(
-        counts, ["neg_freq", "word"], "word_id", persist_registry=persist_registry
+        counts, ["neg_freq", "word"], "word_id", persist_registry=persist_registry,
+        bucket_col=bucket,
     ).drop("neg_freq")
     if max_size is not None:
         vocab = vocab.filter(F.col("word_id") <= max_size)

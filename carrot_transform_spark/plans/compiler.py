@@ -21,11 +21,11 @@ One plan per OMOP target table:
        of their scans, per-file rules hoisted into a broadcast table)
     union files per target (implicit UNION ALL)
       -> dense auto-number ids in write order (W1, operators/ids.py: one
-         window when the bound is small, the bucket path when the source
-         carries a line bucket, else a sizing count, then one window when
-         small or the range path)
+         window when the bound is small, the bucket path when the bound is
+         large, else a sizing count, then one window when small or the
+         bucket path over (file, 65,536-line block))
       -> person-map broadcast join (J2; anti-join rejects counted),
-         persisted when the ids took the sized small path so that records,
+         persisted when the ids were sized with a count so that records,
          rejects, metrics and the sink share one materialization
 
 All data-plane values stay strings for byte-parity with the reference's
@@ -296,15 +296,17 @@ class CarrotPlanner:
                 "source_subject", F.col("source_subject").alias("target_subject"), LINE_COL
             )
         size_bound = source.size_hint(self.person_table)
-        bucket_col = None
+        # dense-id bucket above the small threshold: 65,536-line blocks (a
+        # multiLine CSV file reads as ONE partition: no line >> 33)
+        bucket_col: str | Column = F.shiftright(F.col(LINE_COL), 16)
         if size_bound is not None and size_bound > SMALL_THRESHOLD:
             # large person file: derive a deterministic range bucket of the
             # min-line key from the source's footer statistics so dense ids
-            # come from the zero-sampling bucket path (parallel per-bucket
-            # window + broadcast starts) instead of persist + count + a
-            # single-partition sort of every person (~2.8 s serial at sf10).
-            # The one narrow exchange the window inserts replaces the
-            # SinglePartition exchange the serial sort needed anyway.
+            # come from the bucket path with no sizing pass instead of
+            # persist + count + a single-partition sort of every person
+            # (~2.8 s serial at sf10). The one narrow exchange the window
+            # inserts replaces the SinglePartition exchange the serial sort
+            # needed anyway.
             bounds = source.line_bounds(self.person_table)
             if bounds is not None and bounds[1] > bounds[0]:
                 lo, hi = bounds
@@ -345,8 +347,8 @@ class CarrotPlanner:
     def _candidates(
         self, source: Source, target: str, stats: RejectStats | None
     ) -> tuple[DataFrame, bool]:
-        """target_candidates, plus whether dense-id assignment took its
-        sized small path, i.e. left the pre-id candidates persisted."""
+        """target_candidates, plus whether dense-id assignment sized its
+        input with a count, i.e. left the pre-id candidates persisted."""
         schema = self.omop.table(target)
         per_source = self.rules.mappings[target]
         # FILEIDX follows the reference's GLOBAL input-file iteration order
@@ -470,7 +472,11 @@ class CarrotPlanner:
             # FIELDIDX (declaration-order ordinal), NOT the field name: the
             # reference iterates data columns in concept_mappings order, so a
             # lexicographic field sort would diverge whenever declaration
-            # order isn't alphabetical
+            # order isn't alphabetical. Without the rider, the bucket is the
+            # (file, 65,536-line block) of the meta columns.
+            block = F.shiftleft(F.col(FILEIDX_COL).cast("long"), 47).bitwiseOR(
+                F.shiftright(F.col(LINE_COL), 16)
+            )
             out = with_dense_ids(
                 out,
                 [FILEIDX_COL, LINE_COL, FIELDIDX_COL, COMBO_COL],
@@ -478,14 +484,13 @@ class CarrotPlanner:
                 offset=self.last_used_ids.get(target, 0),
                 persist_registry=self._persisted,
                 size_bound=cand_bound,
-                bucket_col=BUCKET_COL if use_bucket else None,
+                bucket_col=BUCKET_COL if use_bucket else block,
             )
             out = out.withColumn(auto_col, F.col("__ct_auto").cast("string")).drop("__ct_auto")
         if use_bucket:
             out = out.drop(BUCKET_COL)
-        # with_dense_ids persists the very DataFrame it was given, so the
-        # flag is set exactly when the sized small path kept it cached (the
-        # range path unpersists it again; the other paths never persist it)
+        # with_dense_ids keeps the very DataFrame it was given persisted
+        # whenever it counts it: the flag is set exactly then
         return out, sized.is_cached
 
     def target_records(
@@ -498,16 +503,17 @@ class CarrotPlanner:
         """Final records: person ids mapped via broadcast join; rejects
         counted into stats (run.py:275-299 semantics).
 
-        When dense ids took their sized small path, the person-joined frame
-        is persisted: the kept records, the reject counts, the output
-        metrics and the sink then all read that one cache, and none of them
-        re-runs the single-partition id window or the person join. The
-        footer-sized, bucket and range id paths get no cache of their own."""
+        When dense ids sized their input with a count (no footer bound;
+        CSV sources at any size), the person-joined frame is persisted: the
+        kept records, the reject counts, the output metrics and the sink
+        then all read that one cache, and none of them re-runs the id
+        window or the person join. The footer-sized id paths get no cache
+        of their own."""
         person_col = self.omop.person_col(target)
-        cand, sized_small = self._candidates(source, target, stats)
+        cand, sized = self._candidates(source, target, stats)
         pmap = F.broadcast(person_map.select("source_subject", "target_subject"))
         joined = cand.join(pmap, cand[person_col] == pmap.source_subject, "left")
-        if sized_small:
+        if sized:
             joined = joined.persist()
             self._persisted.append(joined)
         kept = joined.filter(F.col("target_subject").isNotNull()).withColumn(

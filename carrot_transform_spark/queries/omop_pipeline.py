@@ -207,9 +207,9 @@ def _invalidate_if_cache_cleared(spark: SparkSession, sf_dir: str) -> None:
 
     Executing the stale plans as-is would be silently pathological, not
     cold: plan nodes still MARKED persisted but holding no data recompute
-    their full lineage at every consumer, and repartitionByRange's sampling
-    pass re-executes the now-uncached expensive child ~3x (measured
-    10s -> 44s on the sf1 observation stream). Originally this dropped
+    their full lineage at every consumer (a since-deleted range-partition
+    id path measured 10s -> 44s on the sf1 observation stream, its
+    sampling pass re-executing the uncached child ~3x). Originally this dropped
     every memo (full py4j plan re-construction, ~0.6-0.7 s per query per
     bench rep); now it RE-REGISTERS the persists instead — pm and every
     frame the planner recorded in _persisted get .persist() again, so the

@@ -202,8 +202,9 @@ _W1_SQL = """
 def op_w1_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense 1..N id assignment with an offset (--last-used-ids-file
     semantics). Needs an explicit deterministic order; at 100 TB scale the
-    same semantics come from per-partition counts + offsets (see
-    operators/ids.py) instead of a single global window."""
+    same semantics come from per-bucket counts + offsets over a
+    value-determined bucket (see operators/ids.py) instead of a single
+    global window."""
     c = load(spark, sf_dir, "customer").filter(F.col("c_custkey") % 3 != 0)
     w = Window.orderBy("c_custkey")
     return c.select(

@@ -25,6 +25,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
+from pyspark.sql.types import StructField, StructType
 
 _URL_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*://")
 
@@ -65,6 +66,23 @@ def _plan_input_bytes(df: DataFrame) -> int | None:
         return total
     except Exception:
         return None
+
+
+def _write_rows_through_spark(
+    self, name: str, header: list[str], rows: list[list[str]], spark=None
+) -> None:
+    """``write_rows`` of the JDBC and JSONL sinks: driver-side rows (metrics
+    summaries) written through the sink's own ``write`` as an all-string
+    table. Same (name, header, rows, spark=None) order and trailing-empty-
+    header 'shorten' quirk as ``TsvDirSink.write_rows`` (pipeline.py passes
+    the summary this way)."""
+    if spark is None:
+        raise ValueError(f"write_rows to a {type(self).__name__} needs the spark session")
+    if header and header[-1] == "":
+        header = header[:-1]
+        rows = [r[:-1] for r in rows]
+    schema = StructType([StructField(c, StringType()) for c in header])
+    self.write(name, spark.createDataFrame([tuple(r) for r in rows], schema), header)
 
 
 class TsvDirSink:
@@ -218,22 +236,7 @@ class JdbcSink:
             writer = writer.option(k, v)
         writer.save()
 
-    def write_rows(
-        self, name: str, header: list[str], rows: list[list[str]], spark=None
-    ) -> None:
-        """Driver-side rows (metrics summaries) as a table — the SQL twin of
-        TsvDirSink.write_rows, same shorten quirk."""
-        if spark is None:
-            raise ValueError("write_rows to a JDBC sink needs the spark session")
-        shorten = bool(header) and header[-1] == ""
-        if shorten:
-            header = header[:-1]
-            rows = [r[:-1] for r in rows]
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        schema = StructType([StructField(c, StringType()) for c in header])
-        df = spark.createDataFrame([tuple(r) for r in rows], schema)
-        self.write(name, df, header)
+    write_rows = _write_rows_through_spark
 
 
 class JsonlDirSink:
@@ -255,25 +258,7 @@ class JsonlDirSink:
             "ignoreNullFields", False
         ).json(f"{self.directory}/{name}.jsonl")
 
-    def write_rows(
-        self, name: str, header: list[str], rows: list[list[str]], spark=None
-    ) -> None:
-        """Same (name, header, rows, spark=None) order as the other sinks —
-        pipeline.py calls write_rows(name, header, rows, spark=...) for the
-        summary table, so a divergent order crashes every jsonl: run at the
-        summary write. The TSV sinks' trailing-empty-header 'shorten' quirk
-        applies here too (the summary header carries it)."""
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        if spark is None:
-            raise ValueError("write_rows to a JSONL sink needs the spark session")
-        shorten = bool(header) and header[-1] == ""
-        if shorten:
-            header = header[:-1]
-            rows = [r[:-1] for r in rows]
-        schema = StructType([StructField(c, StringType()) for c in header])
-        df = spark.createDataFrame([tuple(r) for r in rows], schema)
-        self.write(name, df, header)
+    write_rows = _write_rows_through_spark
 
 
 def make_sink(spark, spec, mode: str = "single"):

@@ -25,9 +25,11 @@ LINE_COL = "__ct_line"
 # by sources that can compute the line-key bounds cheaply, e.g. from
 # parquet footer statistics). Monotone non-decreasing in LINE_COL by
 # construction, so every bucket owns a disjoint line range — the dense-id
-# operator can then assign ids with zero extra shuffles and no range
-# sampling (operators/ids._bucket_dense_ids). Sources that add it also
+# operator can then assign ids with zero extra shuffles and no sizing
+# count (operators/ids._bucket_dense_ids). Sources that add it also
 # hash-repartition their output on it, making it the spread exchange key.
+# Sources without it get a bucket of 65,536-line blocks of LINE_COL from
+# the planner instead.
 BUCKET_COL = "__ct_bucket"
 
 
@@ -73,9 +75,9 @@ class Source:
     def line_bounds(self, table: str) -> tuple[int, int] | None:
         """(min, max) of read(table)'s LINE_COL values when knowable
         without a scan (e.g. parquet footer statistics of the natural-key
-        column), else None. Lets dense-id assignment derive deterministic
-        range buckets of the line key (ids._bucket_dense_ids) instead of
-        a sampling range exchange."""
+        column), else None. Lets a large person map derive deterministic
+        range buckets of the line key (ids._bucket_dense_ids) with no
+        sizing count."""
         return None
 
     def _finalize(self, df: DataFrame) -> DataFrame:

@@ -9,7 +9,10 @@ Generates (in a temp dir):
   events.csv   pid,event_date,code,score        (n_events rows)
 and a v2 rules file mapping persons -> person (term maps incl. one
 multi-concept value) and events -> observation (wildcard + value map),
-then runs run_transform with the distributed TSV sink.
+then runs run_transform with the distributed TSV sink. Prints one JSON
+line: the timings, each output table's row count, and an order-independent
+checksum of each table as written (the sum of every row's xxhash64 over all
+its columns, ids included), so two trees can be compared on their outputs.
 """
 
 from __future__ import annotations
@@ -134,23 +137,28 @@ def main() -> None:
         write_outputs=False,
     )
     sink = TsvDirSink(out_dir, mode="distributed")
+
+    def written(name: str):
+        return spark.read.option("header", True).option("sep", "\t").csv(str(out_dir / name))
+
     counts = {}
     for target, df in res.tables.items():
         cols = [c for c in df.columns if not c.startswith("__ct_")]
         sink.write(target, df, cols)
-        counts[target] = (
-            spark.read.option("header", True).option("sep", "\t").csv(str(out_dir / target)).count()
-        )
+        counts[target] = written(target).count()
     # person_ids through the sink (streamed/distributed — never a driver
     # collect), same as pipeline.run_transform's write path
     pm = res.person_map.selectExpr(
         "source_subject AS SOURCE_SUBJECT", "CAST(target_subject AS STRING) AS TARGET_SUBJECT"
     )
     sink.write("person_ids", pm, ["SOURCE_SUBJECT", "TARGET_SUBJECT"])
-    counts["person_ids"] = (
-        spark.read.option("header", True).option("sep", "\t").csv(str(out_dir / "person_ids")).count()
-    )
+    counts["person_ids"] = written("person_ids").count()
     run_time = time.perf_counter() - t1
+    checksums = {}
+    for name in counts:
+        df = written(name)
+        total = df.select(F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)"))).first()[0]
+        checksums[name] = str(total)
 
     total_out = sum(counts.values())
     print(
@@ -161,6 +169,7 @@ def main() -> None:
                 "gen_sec": round(gen_time, 1),
                 "etl_sec": round(run_time, 1),
                 "output_rows": counts,
+                "checksums": checksums,
                 "rows_out_per_sec": int(total_out / run_time),
             }
         )
