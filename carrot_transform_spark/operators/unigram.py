@@ -114,15 +114,22 @@ def piece_vocab(
     )
 
 
-def _lattice_frame(
-    w: DataFrame,
-    pieces: DataFrame,
-    max_piece: int,
-    persist_registry: list | None = None,
-) -> DataFrame:
+def _hand_over(owned: list, persist_registry: list | None) -> None:
+    """The caller's registry takes the frames a DP persisted; without one
+    they are unpersisted here (the result then recomputes what it reads of
+    them)."""
+    if persist_registry is not None:
+        persist_registry.extend(owned)
+    else:
+        for df in owned:
+            df.unpersist()
+
+
+def _lattice_frame(w: DataFrame, pieces: DataFrame, max_piece: int, owned: list) -> DataFrame:
     """(word, j, pos, piece, cost): every in-vocab piece occurrence slot of
     every word — the shared segmentation lattice behind the Viterbi DP and
-    the soft-EM forward-backward pass (ONE explode + broadcast join)."""
+    the soft-EM forward-backward pass (ONE explode + broadcast join),
+    persisted into ``owned`` and materialized."""
     slots = w.select(
         "word",
         F.explode(
@@ -139,8 +146,7 @@ def _lattice_frame(
         .select("word", "j", "pos", "piece", "cost")
         .persist()
     )
-    if persist_registry is not None:
-        persist_registry.append(lattice)
+    owned.append(lattice)
     lattice.count()
     return lattice
 
@@ -160,9 +166,8 @@ def viterbi_segment(
     """
     spark = words.sparkSession
     w = words.persist()
-    if persist_registry is not None:
-        persist_registry.append(w)
-    lattice = _lattice_frame(w, pieces, max_piece, persist_registry)
+    owned = [w]
+    lattice = _lattice_frame(w, pieces, max_piece, owned)
     # DP: one small frame per settled position, eagerly localCheckpoint-ed
     # so round r+1 re-plans from a LogicalRDD leaf. Without the cut, each
     # round's plan embeds the last max_piece rounds' full trees — a
@@ -232,6 +237,7 @@ def viterbi_segment(
         .select("word", "cnt", "cost", "seg")
         .withColumn("n_tokens", F.size(F.split("seg", _US)))
     )
+    _hand_over(owned, persist_registry)
     return done.select("word", "cnt", "cost", "seg", "n_tokens")
 
 
@@ -305,9 +311,8 @@ def soft_expected_counts(
     calls (see _lse_round)."""
     spark = words.sparkSession
     w = words.persist()
-    if persist_registry is not None:
-        persist_registry.append(w)
-    lattice = _lattice_frame(w, pieces, max_piece, persist_registry)
+    owned = [w]
+    lattice = _lattice_frame(w, pieces, max_piece, owned)
 
     from functools import reduce
 
@@ -400,6 +405,7 @@ def soft_expected_counts(
             .alias("t"),
         )
     )
+    _hand_over(owned, persist_registry)
     return weighted.groupBy("piece").agg(F.sum("t").alias("used"))
 
 

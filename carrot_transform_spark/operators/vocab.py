@@ -31,7 +31,11 @@ def build_vocab(
     max_size: int | None = None,
     persist_registry: list[DataFrame] | None = None,
 ) -> DataFrame:
-    """(word, freq, word_id) with word_id = 1..N in (freq desc, word) order."""
+    """(word, freq, word_id) with word_id = 1..N in (freq desc, word) order.
+
+    persist_registry: optional list the caller owns. When given, the
+    per-word counts are persisted into it, so the id statistics job and
+    the numbering read one aggregation; without it nothing is persisted."""
     counts = (
         df.select(F.explode(F.split(F.trim(text_col), r"\s+")).alias("word"))
         .filter(F.col("word") != "")
@@ -40,11 +44,13 @@ def build_vocab(
         .filter(F.col("freq") >= min_freq)
         .withColumn("neg_freq", -F.col("freq"))
     )
+    if persist_registry is not None:
+        counts = counts.persist()
+        persist_registry.append(counts)
     # words sharing (freq, first two characters) are contiguous in the order
     bucket = F.xxhash64("neg_freq", F.substring("word", 1, 2))
     vocab = with_dense_ids(
-        counts, ["neg_freq", "word"], "word_id", persist_registry=persist_registry,
-        bucket_col=bucket,
+        counts, ["neg_freq", "word"], "word_id", bucket_col=bucket,
     ).drop("neg_freq")
     if max_size is not None:
         vocab = vocab.filter(F.col("word_id") <= max_size)

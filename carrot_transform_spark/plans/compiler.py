@@ -21,12 +21,11 @@ One plan per OMOP target table:
        of their scans, per-file rules hoisted into a broadcast table)
     union files per target (implicit UNION ALL)
       -> dense auto-number ids in write order (W1, operators/ids.py: one
-         window when the bound is small, the bucket path when the bound is
-         large, else a sizing count, then one window when small or the
-         bucket path over (file, 65,536-line block))
+         window when the size bound, or else the bucket statistics, say
+         small; otherwise the bucket path over (file, 65,536-line block))
       -> person-map broadcast join (J2; anti-join rejects counted),
-         persisted when the ids were sized with a count so that records,
-         rejects, metrics and the sink share one materialization
+         persisted in a run (stats passed) so that records, rejects,
+         metrics and the sink share one materialization
 
 All data-plane values stay strings for byte-parity with the reference's
 TSV output. Reference semantics citations are inline; the reference builds
@@ -301,12 +300,11 @@ class CarrotPlanner:
         bucket_col: str | Column = F.shiftright(F.col(LINE_COL), 16)
         if size_bound is not None and size_bound > SMALL_THRESHOLD:
             # large person file: derive a deterministic range bucket of the
-            # min-line key from the source's footer statistics so dense ids
-            # come from the bucket path with no sizing pass instead of
-            # persist + count + a single-partition sort of every person
-            # (~2.8 s serial at sf10). The one narrow exchange the window
-            # inserts replaces the SinglePartition exchange the serial sort
-            # needed anyway.
+            # min-line key from the source's footer statistics, so the
+            # bucket path numbers the persons instead of a single-partition
+            # sort of every person (~2.8 s serial at sf10). The one narrow
+            # exchange the window inserts replaces the SinglePartition
+            # exchange the serial sort needed anyway.
             bounds = source.line_bounds(self.person_table)
             if bounds is not None and bounds[1] > bounds[0]:
                 lo, hi = bounds
@@ -321,9 +319,9 @@ class CarrotPlanner:
             [LINE_COL],
             "target_subject",
             offset=0,
-            persist_registry=self._persisted,
-            # distinct persons <= person-file rows; footer metadata makes this
-            # free and known-small inputs then skip the sizing pass
+            # distinct persons <= person-file rows; footer metadata or CSV
+            # file bytes make this free, and known-small inputs then take
+            # the window with no job
             size_bound=size_bound,
             bucket_col=bucket_col,
         )
@@ -342,13 +340,6 @@ class CarrotPlanner:
         join), with meta columns for ordering and metrics. Auto-number ids
         are assigned here — the reference consumes an id even for records
         later rejected by the person lookup (record_builder.py:149-163)."""
-        return self._candidates(source, target, stats)[0]
-
-    def _candidates(
-        self, source: Source, target: str, stats: RejectStats | None
-    ) -> tuple[DataFrame, bool]:
-        """target_candidates, plus whether dense-id assignment sized its
-        input with a count, i.e. left the pre-id candidates persisted."""
         schema = self.omop.table(target)
         per_source = self.rules.mappings[target]
         # FILEIDX follows the reference's GLOBAL input-file iteration order
@@ -466,7 +457,6 @@ class CarrotPlanner:
         # positional union is safe: every part ends in the same final
         # select, so column order is identical by construction
         out = _union_tree(parts)
-        sized = out
         auto_col = self.omop.auto_number_col(target)
         if auto_col and auto_col in schema.columns:
             # FIELDIDX (declaration-order ordinal), NOT the field name: the
@@ -482,16 +472,13 @@ class CarrotPlanner:
                 [FILEIDX_COL, LINE_COL, FIELDIDX_COL, COMBO_COL],
                 "__ct_auto",
                 offset=self.last_used_ids.get(target, 0),
-                persist_registry=self._persisted,
                 size_bound=cand_bound,
                 bucket_col=BUCKET_COL if use_bucket else block,
             )
             out = out.withColumn(auto_col, F.col("__ct_auto").cast("string")).drop("__ct_auto")
         if use_bucket:
             out = out.drop(BUCKET_COL)
-        # with_dense_ids keeps the very DataFrame it was given persisted
-        # whenever it counts it: the flag is set exactly then
-        return out, sized.is_cached
+        return out
 
     def target_records(
         self,
@@ -503,23 +490,19 @@ class CarrotPlanner:
         """Final records: person ids mapped via broadcast join; rejects
         counted into stats (run.py:275-299 semantics).
 
-        When dense ids sized their input with a count (no footer bound;
-        CSV sources at any size), the person-joined frame is persisted: the
-        kept records, the reject counts, the output metrics and the sink
-        then all read that one cache, and none of them re-runs the id
-        window or the person join. The footer-sized id paths get no cache
-        of their own."""
+        With stats (a run), the person-joined frame of every target, the
+        person target included, is persisted: the kept records, the reject
+        counts, the output metrics and the sink then all read that one
+        cache, and none of them re-runs the record fan-out, the id window
+        or the person join. Without stats (the registry's omop_* queries)
+        the plan caches nothing of its own."""
         person_col = self.omop.person_col(target)
-        cand, sized = self._candidates(source, target, stats)
+        cand = self.target_candidates(source, target, stats)
         pmap = F.broadcast(person_map.select("source_subject", "target_subject"))
         joined = cand.join(pmap, cand[person_col] == pmap.source_subject, "left")
-        if sized:
+        if stats is not None:
             joined = joined.persist()
             self._persisted.append(joined)
-        kept = joined.filter(F.col("target_subject").isNotNull()).withColumn(
-            person_col, F.col("target_subject").cast("string")
-        ).drop("source_subject", "target_subject")
-        if stats is not None:
             # deferred: flush_metrics() unions every target's reject counts
             # into ONE collect instead of one job per (file, target)
             nulls = joined.filter(F.col("target_subject").isNull())
@@ -541,7 +524,9 @@ class CarrotPlanner:
             )
             with self._compile_lock:
                 self._pending_rejects.append((rej, stats))
-        return kept
+        return joined.filter(F.col("target_subject").isNotNull()).withColumn(
+            person_col, F.col("target_subject").cast("string")
+        ).drop("source_subject", "target_subject")
 
     def flush_metrics(self) -> None:
         """Run every deferred metric aggregation: ONE combined job per

@@ -61,8 +61,10 @@ class Source:
 
     def size_hint(self, table: str) -> int | None:
         """Cheap upper bound on read(table)'s row count (e.g. parquet footer
-        metadata), or None when unknowable without a scan. Lets dense-id
-        assignment skip its sizing pass for known-small inputs."""
+        metadata or CSV file bytes), or None when unknowable without a
+        scan. Dense-id assignment numbers a known-small input with one
+        window and no job; with no bound, its bucket statistics size the
+        input."""
         return None
 
     def scan_splits(self, table: str) -> int | None:
@@ -152,6 +154,23 @@ class CsvDirSource(Source):
         except OSError:
             return None
         return max(1, -(-size // _max_partition_bytes(self.spark)))
+
+    def size_hint(self, table: str) -> int | None:
+        """(bytes - header-line bytes + 1) // 2, with no scan: every row
+        Spark returns takes at least one character and a line break (the
+        last row may lack the break), and a blank line is no row. Not
+        bytes / columns: PERMISSIVE mode keeps short rows. A directory of
+        part files subtracts no header."""
+        path = self._path(table)
+        try:
+            size = _path_bytes(path)
+            header = 0
+            if not path.is_dir():
+                with path.open("rb") as fh:
+                    header = len(fh.readline())
+        except OSError:
+            return None
+        return (size - header + 1) // 2
 
     def read(self, table: str) -> DataFrame:
         path = self._path(table)

@@ -6,11 +6,11 @@ v2 ruleset over >=20M input rows, compiled and fully executed with
 group_same_shape on and off.
 
 What it reports per mode: build wall = target_candidates(), which at
-this volume INCLUDES the dense-id materialization jobs (with_dense_ids
-persists the candidates frame and counts it — the full record-template
-execution happens here, so this is the number where executor-side
-template cost shows up); agg wall = the checksum aggregation over the
-then-cached frame; metrics-flush wall (grouped = ONE groupBy(fileidx)
+this volume INCLUDES the dense-id statistics job (with_dense_ids' bucket
+statistics run the full record template once, so this is the number
+where executor-side template cost shows up); agg wall = the checksum
+aggregation, which runs the template again (nothing is cached);
+metrics-flush wall (grouped = ONE groupBy(fileidx)
 job, per-block = one combined job per file); and a row-count + column
 checksum so the two executions are provably the same records.
 

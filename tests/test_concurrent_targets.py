@@ -7,8 +7,9 @@ it, so a wide-band decision leaking from one target's build into another's
 changes a fingerprint. Each build runs in its own process, as
 scripts/plan_fingerprints.py is meant to be compared.
 
-Each target's records read one cached person-joined frame, so no reader of
-them re-runs the dense-id window. The target builds add their output
+Each target's records, the person target's included, read one cached
+person-joined frame, so no reader of them re-runs the dense-id window or
+the record fan-out. The target builds add their output
 counts to one MetricsCollector concurrently, and lose none."""
 
 from __future__ import annotations
@@ -102,6 +103,8 @@ def test_target_records_read_one_cached_frame(spark, tmp_path):
         for target, df in result.tables.items():
             nodes = _plan_nodes(df._jdf.queryExecution().optimizedPlan())
             assert "Window" not in nodes, (target, nodes)
+            # the person join sits under the cache, not above it
+            assert "InMemoryRelation" in nodes and "Join" not in nodes, (target, nodes)
     finally:
         result.release()
 

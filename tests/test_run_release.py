@@ -1,4 +1,5 @@
-"""A failed `run_transform` leaves no cache behind.
+"""A `run_transform` that writes its outputs leaves no cache behind, and
+neither does a failed one.
 
 Each target's sink write runs inside its build task, so a write that
 raises ends the run from the target pool; the planner's caches and the
@@ -27,4 +28,12 @@ def test_failed_target_write_releases_every_cache(spark, tmp_path, monkeypatch):
     before = persistent.size()
     with pytest.raises(RuntimeError, match="sink down"):
         run_transform(spark, rules, inputs, str(tmp_path / "out"), PERSON_TABLE)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def test_written_run_releases_every_cache(spark, tmp_path):
+    rules, inputs, exp = gen_fanout(tmp_path / "in", 3, persons=40, events=60, files=1)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    result = run_transform(spark, rules, inputs, str(tmp_path / "out"), PERSON_TABLE)
+    assert set(result.tables) == set(exp.table_rows)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before

@@ -92,3 +92,37 @@ def test_csv_source_sums_extensionless_directory(spark, tmp_path):
         if prev is not None:
             spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
     assert n is not None and n >= 3
+
+
+def test_csv_size_hint_bounds_spark_row_count(spark, tmp_path):
+    # each file's text: the bound from its bytes must cover Spark's count
+    cases = {
+        "bom": "\ufeffa,b\n1,2\n3,4\n",
+        "crlf": "a,b\r\n1,2\r\n3,4\r\n",
+        "quoted": 'a,b\n"x\ny",1\n"p\n\nq",2\n"",3\n',
+        "no_final_newline": "a,b\n1,2\n3,4",
+        "blank_lines": "a,b\n\n1,2\n\n\n3,4\n\n",
+        "short_rows": "a,b,c,d,e\n1\n2\n3\n\n4",
+        "excel_comma": "a,b,\n1,2,\n3,4,\n",
+        "header_only": "a,b\n",
+        "header_no_newline": "a,b",
+        "empty": "",
+    }
+    for name, text in cases.items():
+        (tmp_path / f"{name}.csv").write_text(text, encoding="utf-8")
+    (tmp_path / "semi.csv").write_text("a;b\n1;2\n;\n3;4\n")
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    for i in range(3):
+        (parts / f"part-{i}.csv").write_text("a,b\n" + "1,2\n" * (i + 1))
+    src = CsvDirSource(spark, tmp_path)
+    for table, source in [(n, src) for n in [*cases, "parts"]] + [
+        ("semi", CsvDirSource(spark, tmp_path, sep=";"))
+    ]:
+        bound = source.size_hint(table)
+        rows = source.read(table).count()
+        assert bound is not None and bound >= rows, (table, bound, rows)
+    # the bound is tight for one-character rows and zero for a header alone
+    assert src.size_hint("short_rows") == src.read("short_rows").count() == 4
+    assert src.size_hint("header_only") == src.size_hint("header_no_newline") == 0
+    assert src.size_hint("missing") is None

@@ -188,3 +188,29 @@ def test_save_load_encode_roundtrip(spark, tmp_path):
     (row,) = unigram_encode(new, table).collect()
     assert row["ids"][-2:] == [UNK_ID, UNK_ID]
     assert all(i != UNK_ID for i in row["ids"][:-2])
+
+
+def _live_caches(spark) -> int:
+    """Persistent RDDs other than local checkpoints: the DP's per-round
+    checkpoints are the returned frame's own leaves, not caches a call
+    leaves behind."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+    return sum(1 for r in rdds if not r.rdd().isLocallyCheckpointed())
+
+
+def test_segment_without_registry_leaves_no_cache(spark):
+    words = {"inter": 2, "winter": 3, "net": 1, "art": 2}
+    pieces = _py_pieces(words, 3, 2)
+    wc = spark.createDataFrame(list(words.items()), "word string, cnt long")
+    pv = spark.createDataFrame(
+        [(p, f, c) for p, (f, c) in pieces.items()], "piece string, freq long, cost long"
+    )
+    before = _live_caches(spark)
+    seg = viterbi_segment(wc, pv, max_word=6, max_piece=3)
+    assert _live_caches(spark) == before
+    got = {r["word"]: (r["cost"], r["seg"], r["n_tokens"]) for r in seg.collect()}
+    want = {}
+    for w in words:
+        cost, s = _py_viterbi(w, pieces, 3)
+        want[w] = (cost, s, len(s.split(US)))
+    assert got == want
