@@ -78,8 +78,8 @@ def run_transform(
     check_person_table_name(person_table)
     check_person_rules(rules, person_table)
     source = inputs if isinstance(inputs, Source) else make_source(spark, str(inputs))
-    if isinstance(source, CsvDirSource):
-        for w in check_files_exist(rules, source.directory):
+    if isinstance(source, CsvDirSource) and not source.is_url:
+        for w in check_files_exist(rules, source.location):
             logging.getLogger(__name__).warning("%s", w)
 
     planner = CarrotPlanner(

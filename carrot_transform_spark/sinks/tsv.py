@@ -20,14 +20,13 @@ merge: the URL scheme's FileSystem, or the raw local one for a path (no
 
 from __future__ import annotations
 
-import re
 from pathlib import Path
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType, StringType
 from pyspark.sql.types import StructField, StructType
 
-_URL_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*://")
+from carrot_transform_spark.sources.registry import _URL_RE, configure_minio, hadoop_path
 
 # "single" mode exists for byte-exact parity with the reference goldens and
 # copies every byte of a table through one driver-side stream. Refuse it
@@ -113,14 +112,8 @@ class TsvDirSink:
         self.single_size_cap = single_size_cap
 
     def _path(self, spark, name: str):
-        """(Hadoop FileSystem, Path) of `<directory>/<name>`; a local
-        directory gets the raw FileSystem, which writes no `.crc` files."""
-        fs_api, hconf = spark._jvm.org.apache.hadoop.fs, spark._jsc.hadoopConfiguration()
-        if self.is_url:
-            path = fs_api.Path(f"{self.base}/{name}")
-            return path.getFileSystem(hconf), path
-        path = fs_api.Path(f"file://{self.directory.resolve()}/{name}")
-        return fs_api.FileSystem.getLocal(hconf).getRaw(), path
+        """(Hadoop FileSystem, Path) of `<directory>/<name>` (hadoop_path)."""
+        return hadoop_path(spark, f"{self.base}/{name}" if self.is_url else self.directory / name)
 
     def write(self, name: str, df: DataFrame, columns: list[str]) -> None:
         # "shorten" quirk (reference outputs.py:62-83 start/write): when the
@@ -269,8 +262,6 @@ def make_sink(spark, spec, mode: str = "single"):
     if s.startswith("jsonl:"):
         return JsonlDirSink(s[len("jsonl:"):])
     if s.startswith("minio:"):
-        from carrot_transform_spark.sources.registry import configure_minio
-
         return TsvDirSink(configure_minio(spark, s), mode=mode)
     if s.startswith("s3a://") or s.startswith("s3://"):
         return TsvDirSink(s.replace("s3://", "s3a://", 1), mode=mode)

@@ -1,9 +1,10 @@
 """Input connectors: named source tables -> string-typed DataFrames.
 
 Mirrors the reference's SourceObject dispatch (sources.py:57-69):
-- 'minio:...' / 's3a://...' -> object-store CSV (same reader, s3a paths)
+- 'minio:...' / 's3a://...' -> CSV, the local directory's reader on s3a paths
 - '<scheme>://...'          -> JDBC
-- otherwise                 -> local CSV directory
+- otherwise                 -> local CSV directory (CsvDirSource: the header
+                               is parsed from the file, so a read runs no job)
 
 Every reader returns all-string columns plus a ``__ct_line`` ordering
 column (monotonically increasing in file order) used for order-dependent
@@ -13,11 +14,14 @@ reference sources.py:160-177) are dropped.
 
 from __future__ import annotations
 
+import csv
 import re
+from collections import Counter
 from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 LINE_COL = "__ct_line"
 
@@ -61,17 +65,17 @@ class Source:
 
     def size_hint(self, table: str) -> int | None:
         """Cheap upper bound on read(table)'s row count (e.g. parquet footer
-        metadata or CSV file bytes), or None when unknowable without a
-        scan. Dense-id assignment numbers a known-small input with one
-        window and no job; with no bound, its bucket statistics size the
-        input."""
+        metadata, or CSV file bytes at a local path or URL alike), or None
+        when unknowable without a scan. Dense-id assignment numbers a small
+        input with one window and no job; with no bound, its bucket
+        statistics size the input."""
         return None
 
     def scan_splits(self, table: str) -> int | None:
-        """Estimated number of partitions the scan of `table` produces, or
-        None when unknowable cheaply. Lets the planner decide whether to
-        spread a narrow scan without the ~1s driver-side plan-to-RDD
-        conversion of df.rdd.getNumPartitions()."""
+        """Estimated partitions of the scan of `table` (file sources: from
+        file sizes and counts, local or object store), or None when
+        unknowable cheaply. Lets the planner spread a narrow scan without
+        the ~1s df.rdd.getNumPartitions() plan-to-RDD conversion."""
         return None
 
     def line_bounds(self, table: str) -> tuple[int, int] | None:
@@ -88,115 +92,156 @@ class Source:
             df = df.select(*keep)
         return df.withColumn(LINE_COL, F.monotonically_increasing_id())
 
-    def _finalize_csv(self, df: DataFrame, header_line=None) -> DataFrame:
-        """CSV variant of _finalize: also trims the Excel trailing-comma
-        artifact. The reference (sources.py:160-177) drops the LAST column
-        when its header name is blank; Spark's CSV reader renames a blank
-        header field to its positional ``_c{i}``, so the blank-name check
-        alone never fires — match the exact name Spark generates for an
-        unnamed final column instead.
 
-        header_line: zero-arg callable returning the file's raw header line
-        (or None). A column GENUINELY named like '_c3' would pattern-match
-        the Spark-generated name, so before trimming, the raw header is
-        consulted — only a header that really ends with the separator (the
-        Excel artifact) triggers the drop. Only invoked when the name check
-        fires, so the common path costs nothing."""
-        cols = df.columns
-        if cols and cols[-1] == f"_c{len(cols) - 1}":
-            raw = header_line() if header_line is not None else None
-            if raw is None or raw.rstrip("\r\n").endswith(getattr(self, "sep", ",")):
-                df = df.select(*cols[:-1])
-        return self._finalize(df)
+_URL_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*://")
+# one line of CSV bytes, with its line break: no UTF-8 sequence holds \r or \n
+_LINE_RE = re.compile(rb"[^\r\n]*(?:\r\n|\r|\n)|[^\r\n]+")
 
 
-def _path_bytes(p: Path) -> int:
-    """Total bytes at `p`: a file's own size, or the recursive sum over a
-    DIRECTORY of part files — a directory's stat size is a few KB and
-    would collapse a multi-GB dataset to one scan split."""
-    if p.is_dir():
-        return sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
-    return p.stat().st_size
+def hadoop_path(spark: SparkSession, location: str | Path):
+    """(Hadoop FileSystem, Path) of a local path or an object-store URL: the
+    URL scheme's FileSystem, or the raw local one (no `.crc` sidecars)."""
+    fs_api, hconf = spark._jvm.org.apache.hadoop.fs, spark._jsc.hadoopConfiguration()
+    if isinstance(location, str) and _URL_RE.match(location):
+        path = fs_api.Path(location)
+        return path.getFileSystem(hconf), path
+    path = fs_api.Path(f"file://{Path(location).resolve()}")
+    return fs_api.FileSystem.getLocal(hconf).getRaw(), path
+
+
+def _data_files(spark: SparkSession, location: str | Path):
+    """(FileSystem, [(Path, bytes)]) of the files a scan of `location` reads:
+    the file itself, or a directory's files in path order, without the
+    hidden ones Spark skips too (`.crc` sidecars, `_SUCCESS`). The list is
+    None when nothing is at `location`."""
+    fs, path = hadoop_path(spark, location)
+    if not fs.exists(path):
+        return fs, None
+    files, todo = [], [fs.getFileStatus(path)]
+    while todo:
+        st = todo.pop()
+        if not st.isDirectory():
+            files.append((st.getPath(), st.getLen()))
+        else:
+            todo += [c for c in fs.listStatus(st.getPath())
+                     if not c.getPath().getName().startswith((".", "_"))]
+    return fs, sorted(files, key=lambda f: f[0].toString())
+
+
+def _scan_splits(spark: SparkSession, splittable_bytes: int, files: int) -> int:
+    """Estimated partitions of a file scan: every file is at least one split,
+    and the bytes Spark may split take one per maxPartitionBytes."""
+    return max(1, files, -(-splittable_bytes // _max_partition_bytes(spark)))
+
+
+def _csv_header(fs, path, sep: str) -> tuple[list[str], bool, int] | None:
+    """(cells, whether its raw text ends with `sep`, bytes through its end)
+    of a CSV file's header: its first non-blank record, parsed as Spark's
+    reader parses it (`sep`, `"` quotes with `""` escapes, UTF-8 with a
+    leading BOM stripped). None for a file with no record."""
+    taken = []  # the raw bytes of every line the parser took
+    stream = fs.open(path)
+
+    def lines():
+        rest, eof = b"", False
+        while not eof:
+            chunk = bytes(stream.readNBytes(1 << 12))
+            eof = not chunk
+            # the last line found may go on in the next chunk
+            *whole, rest = [rest, b""] if eof else _LINE_RE.findall(rest + chunk)
+            for line in filter(None, whole):
+                taken.append(line)
+                yield line.decode("utf-8-sig" if len(taken) == 1 else "utf-8", errors="replace")
+
+    try:
+        for cells in csv.reader(lines(), delimiter=sep, quotechar='"', doublequote=True):
+            if cells:  # a blank line is no record
+                # a quoted line break of the file's kind reads as "\n", as
+                # in Spark's parser (which takes the kind from the first one)
+                eol = taken[0][len(taken[0].rstrip(b"\r\n")):].decode() or "\n"
+                cells = [c.replace(eol, "\n") for c in cells]
+                trailing = taken[-1].rstrip(b"\r\n").endswith(sep.encode())
+                return cells, trailing, sum(map(len, taken))
+        return None
+    finally:
+        stream.close()
 
 
 class CsvDirSource(Source):
-    """<dir>/<table>.csv, read as strings with header (reference S1)."""
+    """<location>/<table>, else <location>/<table>.csv: a file or a directory
+    of part files, read as strings with header (reference S1). The location
+    is a local directory or an object-store URL (reference S3/S4). The
+    header is parsed from the file, so a read submits no Spark job."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        directory: str | Path,
-        sep: str = ",",
-        multiline: bool = True,
-    ):
+    def __init__(self, spark: SparkSession, location: str | Path, sep: str = ",",
+                 multiline: bool = True):
         self.spark = spark
-        self.directory = Path(directory)
+        self.location = str(location).rstrip("/")
+        self.is_url = bool(_URL_RE.match(self.location))
         self.sep = sep
-        # RFC 4180 allows quoted cells to span lines (the reference's
-        # csv.reader accepts them); Spark needs multiLine for that, which
-        # makes a FILE unsplittable — at 100 TB prefer many files (the dir
-        # layout already is) or pass multiline=False for newline-free data
-        # to regain intra-file split parallelism
+        # RFC 4180 cells may span lines (the reference's csv.reader accepts
+        # them); Spark's multiLine reads each FILE as one split, so at scale
+        # use many files, or multiline=False for newline-free data
         self.multiline = multiline
 
-    def _path(self, table: str) -> Path:
-        name = table if table.endswith(".csv") else f"{table}.csv"
-        path = self.directory / name
-        if not path.exists():
-            # allow tables named without extension on disk
-            alt = self.directory / table
-            path = alt if alt.exists() else path
-        return path
+    def _locate(self, table: str):
+        """(location, FileSystem, data files) of `<table>`, else of
+        `<table>.csv`; the files are None when neither exists."""
+        for name in (table, f"{table}.csv"):
+            fs, files = _data_files(self.spark, f"{self.location}/{name}")
+            if files is not None:
+                return f"{self.location}/{name}", fs, files
+        return f"{self.location}/{table}", fs, None
 
     def scan_splits(self, table: str) -> int | None:
-        try:
-            size = _path_bytes(self._path(table))
-        except OSError:
+        _, _, files = self._locate(table)
+        if files is None:
             return None
-        return max(1, -(-size // _max_partition_bytes(self.spark)))
+        # a multiLine file is one split, however large
+        size = 0 if self.multiline else sum(n for _, n in files)
+        return _scan_splits(self.spark, size, len(files))
 
     def size_hint(self, table: str) -> int | None:
-        """(bytes - header-line bytes + 1) // 2, with no scan: every row
-        Spark returns takes at least one character and a line break (the
-        last row may lack the break), and a blank line is no row. Not
-        bytes / columns: PERMISSIVE mode keeps short rows. A directory of
-        part files subtracts no header."""
-        path = self._path(table)
-        try:
-            size = _path_bytes(path)
-            header = 0
-            if not path.is_dir():
-                with path.open("rb") as fh:
-                    header = len(fh.readline())
-        except OSError:
+        """(bytes - header bytes + 1) // 2, with no scan: every row Spark
+        returns takes at least one character and a line break (the last may
+        lack it), and a blank line is no row; PERMISSIVE mode keeps short
+        rows, so not bytes / columns. Several part files subtract no header."""
+        _, fs, files = self._locate(table)
+        if files is None:
             return None
-        return (size - header + 1) // 2
+        header = _csv_header(fs, files[0][0], self.sep) if len(files) == 1 else None
+        return (sum(n for _, n in files) - (header[2] if header else 0) + 1) // 2
 
     def read(self, table: str) -> DataFrame:
-        path = self._path(table)
-        df = (
-            self.spark.read.option("header", True)
-            .option("sep", self.sep)
-            .option("inferSchema", False)
-            .option("encoding", "UTF-8")
-            .option("mode", "PERMISSIVE")
-            # RFC 4180 parity with the reference's csv.reader (found by the
-            # connector fuzz): doubled quotes escape quotes — Spark's
-            # default escape is backslash — and quoted cells may span lines
-            .option("escape", '"')
-            .option("multiLine", self.multiline)
-            .csv(str(path))
-        )
-
-        def header_line() -> str | None:
-            try:
-                # utf-8-sig: strip the BOM the same way the reader does
-                with path.open("r", encoding="utf-8-sig", errors="replace") as fh:
-                    return fh.readline()
-            except OSError:
-                return None
-
-        return self._finalize_csv(df, header_line)
+        location, fs, files = self._locate(table)
+        headers = (_csv_header(fs, path, self.sep) for path, _ in files or ())
+        cells, trailing, _ = next(filter(None, headers), ([], False, 0))
+        # Spark's header names (CSVUtils.makeSafeHeader): a blank cell becomes
+        # `_c{i}`; a repeated name (case-folded if not caseSensitive) gets `i`
+        key = str if self.spark.conf.get("spark.sql.caseSensitive") == "true" else str.lower
+        counts = Counter(map(key, cells))
+        names = [f"_c{i}" if c == "" else f"{c}{i}" if counts[key(c)] > 1 else c
+                 for i, c in enumerate(cells)]
+        # raw schema names keep Spark's CSVHeaderChecker from warning on every
+        # scan; colliding ones cannot be schema names (COLUMN_ALREADY_EXISTS)
+        fields = names if max(counts.values(), default=1) > 1 else cells
+        # RFC 4180 parity with the reference's csv.reader (found by the
+        # connector fuzz): doubled quotes escape quotes — Spark's default
+        # escape is backslash — and quoted cells may span lines
+        df = self.spark.read.schema(
+            StructType([StructField(c, StringType()) for c in fields])
+        ).options(
+            header=True, sep=self.sep, encoding="UTF-8", mode="PERMISSIVE",
+            escape='"', multiLine=self.multiline,
+        ).csv(location)
+        if fields != names:
+            df = df.toDF(*names)
+        # the Excel trailing-comma artifact (reference sources.py:160-177): a
+        # blank last name in a header that really ends with the separator,
+        # so a column genuinely named like `_c3` stays
+        if cells and cells[-1] == "" and trailing:
+            df = df.select(*names[:-1])
+        return self._finalize(df)
 
 
 class ParquetDirSource(Source):
@@ -208,11 +253,9 @@ class ParquetDirSource(Source):
         self.directory = Path(directory)
 
     def scan_splits(self, table: str) -> int | None:
-        try:
-            size = (self.directory / f"{table}.parquet").stat().st_size
-        except OSError:
-            return None
-        return max(1, -(-size // _max_partition_bytes(self.spark)))
+        _, files = _data_files(self.spark, self.directory / f"{table}.parquet")
+        return None if files is None else _scan_splits(
+            self.spark, sum(n for _, n in files), len(files))
 
     def read(self, table: str) -> DataFrame:
         df = self.spark.read.parquet(str(self.directory / f"{table}.parquet"))
@@ -244,11 +287,9 @@ class JsonlDirSource(Source):
         return self.directory / f"{table}.jsonl"
 
     def scan_splits(self, table: str) -> int | None:
-        try:
-            size = _path_bytes(self._path(table))
-        except OSError:
-            return None
-        return max(1, -(-size // _max_partition_bytes(self.spark)))
+        _, files = _data_files(self.spark, self._path(table))
+        return None if files is None else _scan_splits(
+            self.spark, sum(n for _, n in files), len(files))
 
     def read(self, table: str) -> DataFrame:
         reader = self.spark.read.option("primitivesAsString", True)
@@ -380,39 +421,6 @@ class JdbcSource(Source):
         return self._finalize(df)
 
 
-class S3CsvSource(Source):
-    """CSV under s3a://bucket/prefix/ (reference S3/S4); for MinIO set
-    fs.s3a.endpoint + path-style access on the SparkSession's hadoop conf."""
-
-    def __init__(self, spark: SparkSession, base_url: str, sep: str = ","):
-        self.spark = spark
-        self.base_url = base_url.rstrip("/")
-        self.sep = sep
-
-    def read(self, table: str) -> DataFrame:
-        url = f"{self.base_url}/{table}"
-        df = (
-            self.spark.read.option("header", True)
-            .option("sep", self.sep)
-            .option("inferSchema", False)
-            .csv(url)
-        )
-
-        def header_line() -> str | None:
-            # one tiny single-line job; only runs when the trailing-column
-            # name check fires in _finalize_csv
-            try:
-                first = self.spark.read.text(url).limit(1).collect()
-                return first[0][0] if first else None
-            except Exception:
-                return None
-
-        return self._finalize_csv(df, header_line)
-
-
-_URL_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.-]*://")
-
-
 def configure_minio(spark: SparkSession, spec: str) -> str:
     """Parse a ``minio:user:pass@http://host:port/bucket/folder`` spec,
     configure the session's s3a filesystem for the endpoint, and return the
@@ -432,9 +440,9 @@ def configure_minio(spark: SparkSession, spec: str) -> str:
 def make_source(spark: SparkSession, spec: str) -> Source:
     """Dispatch a CLI --inputs spec to a connector (reference sources.py:57-69)."""
     if spec.startswith("minio:"):
-        return S3CsvSource(spark, configure_minio(spark, spec))
-    if spec.startswith("s3a://") or spec.startswith("s3://"):
-        return S3CsvSource(spark, spec.replace("s3://", "s3a://", 1))
+        return CsvDirSource(spark, configure_minio(spark, spec))
+    if spec.startswith(("s3a://", "s3://")):
+        return CsvDirSource(spark, spec.replace("s3://", "s3a://", 1))
     if spec.startswith("jsonl:"):
         return JsonlDirSource(spark, spec[len("jsonl:"):])
     if spec.startswith("jdbc:"):

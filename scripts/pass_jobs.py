@@ -12,8 +12,9 @@ every pass time, the job total, and the last pass's output digest and
 check problems (`perfbench/checks.py`).
 
 A job's site is the Python line that called the DataFrame action
-(``count``, ``collect`` or ``toLocalIterator``) or the DataFrameWriter
-action (``text`` or ``csv``) that submitted it, kept
+(``count``, ``collect`` or ``toLocalIterator``), the DataFrameWriter
+action (``text`` or ``csv``) or the DataFrameReader call (``csv``,
+``json`` or ``parquet``: schema inference) that submitted it, kept
 in a job property of its own: PySpark's ``callSite.short`` bookkeeping is
 process-wide and drops the site of a collect that overlaps another
 thread's. Jobs a query starts for its stages and broadcasts carry the
@@ -43,6 +44,7 @@ SITE = "pass_jobs.site"
 ACTIONS = [
     ("pyspark.sql.classic.dataframe", "DataFrame", ("count", "collect", "toLocalIterator")),
     ("pyspark.sql.readwriter", "DataFrameWriter", ("text", "csv")),
+    ("pyspark.sql.readwriter", "DataFrameReader", ("csv", "json", "parquet")),
 ]
 
 

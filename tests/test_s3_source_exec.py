@@ -5,10 +5,10 @@ compiles a 20-line RawLocalFileSystem subclass that answers for the s3a://
 scheme and registers it via fs.s3a.impl on the driver's Hadoop conf (the
 FileSystem cache is JVM-global, so the driver resolving the class once
 covers task threads too). Everything else is the REAL path: make_source
-dispatch, S3CsvSource's reader options, Hadoop FileSystem resolution for
-the s3a scheme, file listing, header parse, trailing-blank-column trim,
-and __ct_line assignment all execute exactly as they would against
-S3/MinIO; only the byte transport differs. (Reference parity:
+dispatch to CsvDirSource (the local directories' reader), Hadoop
+FileSystem resolution for the s3a scheme, file listing, header parse,
+trailing-blank-column trim, and __ct_line assignment all execute exactly
+as they would against S3/MinIO; only the byte transport differs. (Reference parity:
 tests/test_integration.py:105-186 runs the same matrix against live MinIO.)
 """
 
@@ -18,7 +18,7 @@ from pathlib import Path
 
 import pytest
 
-from carrot_transform_spark.sources.registry import LINE_COL, S3CsvSource, make_source
+from carrot_transform_spark.sources.registry import LINE_COL, CsvDirSource, make_source
 
 _FS_JAVA = """
 package ct.testfs;
@@ -111,7 +111,7 @@ def _write_csv(tmp_path):
 def test_s3a_scheme_read_executes(s3a_local, tmp_path):
     d = _write_csv(tmp_path)
     src = make_source(s3a_local, f"s3a://{d}")
-    assert isinstance(src, S3CsvSource)
+    assert isinstance(src, CsvDirSource)
     df = src.read("Demographics.csv")
     assert df.columns == ["PersonID", "DOB", "Sex", LINE_COL]
     rows = {r.PersonID: (r.DOB, r.Sex) for r in df.collect()}
@@ -121,7 +121,7 @@ def test_s3a_scheme_read_executes(s3a_local, tmp_path):
 def test_s3_scheme_normalizes_to_s3a(s3a_local, tmp_path):
     d = _write_csv(tmp_path)
     src = make_source(s3a_local, f"s3://{d}")
-    assert src.base_url.startswith("s3a://")
+    assert src.location.startswith("s3a://")
     assert src.read("Demographics.csv").count() == 2
 
 
@@ -140,6 +140,21 @@ def test_minio_spec_sets_conf_and_reads(s3a_local, tmp_path):
     assert hconf.get("fs.s3a.path.style.access") == "true"
     df = src.read("Demographics.csv")
     assert df.count() == 2 and LINE_COL in df.columns
+
+
+def test_s3a_and_local_read_rfc4180_alike(s3a_local, tmp_path):
+    """One reader for both locations: doubled quotes and a quoted line
+    break parse the same way through s3a:// as from a local directory, and
+    a table named without its extension resolves to `<table>.csv`."""
+    (tmp_path / "t.csv").write_text('id,note\n1,"say ""hi"""\n2,"two\nlines"\n')
+    want = [("1", 'say "hi"'), ("2", "two\nlines")]
+    for spec in (f"s3a://{tmp_path}", str(tmp_path)):
+        src = make_source(s3a_local, spec)
+        assert isinstance(src, CsvDirSource)
+        for table in ("t.csv", "t"):
+            df = src.read(table)
+            assert df.columns == ["id", "note", LINE_COL], (spec, table)
+            assert sorted(tuple(r)[:2] for r in df.collect()) == want, (spec, table)
 
 
 def test_local_csv_trailing_comma_trim(spark, tmp_path):

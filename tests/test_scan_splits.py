@@ -27,17 +27,36 @@ def test_csv_source_estimates_one_split_for_tiny_file(spark, tmp_path):
     assert src.scan_splits("missing") is None
 
 
-def test_csv_source_estimates_many_splits_for_large_file(spark, tmp_path):
-    (tmp_path / "big.csv").write_text("a,b\n" + "1,2\n" * 1000)
-    src = CsvDirSource(spark, tmp_path)
+def _splits_and_partitions(spark, src, table):
+    """(scan_splits estimate, partitions of the real read) at 1 KiB splits."""
     prev = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
     try:
         spark.conf.set("spark.sql.files.maxPartitionBytes", "1024b")
-        n = src.scan_splits("big")
+        return src.scan_splits(table), src.read(table).rdd.getNumPartitions()
     finally:
         if prev is not None:
             spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
-    assert n is not None and n >= 3  # ~4000 bytes / 1 KiB splits
+
+
+def test_csv_source_estimates_many_splits_for_large_file(spark, tmp_path):
+    (tmp_path / "big.csv").write_text("a,b\n" + "1,2\n" * 1000)
+    n, parts = _splits_and_partitions(spark, CsvDirSource(spark, tmp_path, multiline=False), "big")
+    assert n == parts and n >= 3  # ~4000 bytes / 1 KiB splits
+
+
+def test_csv_source_estimates_one_split_per_multiline_file(spark, tmp_path):
+    """A multiLine read (the default) cannot split a file: one partition
+    however large the file, and one per part file of a directory."""
+    (tmp_path / "big.csv").write_text("a,b\n" + "1,2\n" * 1000)
+    src = CsvDirSource(spark, tmp_path)
+    n, parts = _splits_and_partitions(spark, src, "big")
+    assert n == parts == 1
+    d = tmp_path / "parts"
+    d.mkdir()
+    for i in range(3):
+        (d / f"part-{i}.csv").write_text("a,b\n" + "1,2\n" * 300)
+    n, parts = _splits_and_partitions(spark, src, "parts")
+    assert n == parts == 3
 
 
 def test_jdbc_source_split_hints(spark):
